@@ -152,7 +152,7 @@ def main() -> None:
         f"| {hi_n} | {f_hi['frontier_rounds']} | {f_hi['frontier_urls_scheduled']} | {f_hi['frontier_seconds']} | {f_hi['frontier_urls_per_sec']} |",
         "",
         f"Full-crawl efficiency (4→16): {eff_crawl:.3f} — at this input",
-        "size each round's state writes + reload are seconds-scale fixed",
+        "size each round's state pins + writes are seconds-scale fixed",
         "job latency (Spark stage scheduling), which does not parallelize;",
         "the kernel section isolates the per-URL work that does.",
         "",

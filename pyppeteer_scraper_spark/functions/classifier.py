@@ -148,8 +148,12 @@ def quality_model_scored(
 
     Returns ``df.select(*carry)`` plus ``n_grams`` (long),
     ``score_raw`` (bigint) and ``score`` (double) — byte-identical to
-    the Column form's values.
+    the Column form's values.  Raises ``ValueError`` if ``carry`` names
+    a staging or output column.
     """
+    clash = set(carry) & {"__toks", "__grams", "n_grams", "score_raw", "score"}
+    if clash:
+        raise ValueError(f"carry columns clash with output columns: {sorted(clash)}")
     w = weights if weights is not None else default_weights()
     warr = F.array(*[F.lit(int(x)) for x in w])
     toks = F.filter(

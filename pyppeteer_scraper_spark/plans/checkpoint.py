@@ -4,11 +4,12 @@ Reference analogs: the JSON state files re-read each cron run
 (/root/reference/service/alert.py:91-130,460-575) and the Postgres
 snapshot upsert (/root/reference/scraper/canada_ircc.py:101-119).
 Here every round persists {frontier, url_seen, workshops, metrics} as
-round-numbered parquet snapshots plus a manifest — this both IS the
-resume point and truncates DataFrame lineage so the iterative loop's
-plans stay flat (an unbounded union chain would otherwise grow per
-round).  With an Iceberg runtime jar the same seam becomes MERGE INTO
-on snapshot-versioned tables; the layout below mirrors that.
+round-numbered parquet snapshots plus a manifest — the resume point.
+Rounds hand state to each other through executor-pinned frames
+(``localCheckpoint``), which keeps the iterative loop's plans flat; a
+checkpoint is read back only on resume.  With an Iceberg runtime jar
+the same seam becomes MERGE INTO on snapshot-versioned tables; the
+layout below mirrors that.
 """
 
 from __future__ import annotations
@@ -68,33 +69,18 @@ def _run_parallel(thunks) -> None:
             fut.result()
 
 
-def _pin_parallel(dfs: list[DataFrame]) -> list[DataFrame]:
-    """localCheckpoint several state DataFrames, bounding the pinned
-    partition count.  Round 6, two changes motivated by per-round pin
-    profiles (OPTIMIZATION_r06.md):
+def _pin(dfs: list[DataFrame]) -> list[DataFrame]:
+    """localCheckpoint each frame, serially and in caller order, and
+    return the pinned frames in input order.
 
-    - SERIAL, in caller order: the round's pins share intra-round
-      caches (the workshops delta fills the ``actions`` cache, the
-      frontier reads every window/fetch cache) — concurrent
-      checkpoints raced to fill the same cold cache partitions,
-      duplicating the shared subtree's compute; pinned inputs are
-      cache-reads anyway, so overlap bought nothing.
-    - COALESCE before pinning when the partition count exceeds the
-      session's shuffle-partition setting: each round's new frontier
-      is a union of ~6 multi-partition branches, so the pinned
-      partition count otherwise grows by hundreds per round
-      (32 → 160 → 448 in 3 bench rounds) and every downstream stage
-      pays per-task overhead on ever-tinier partitions — the profiled
-      long-crawl per-round floor.  ``coalesce`` merges without a
-      shuffle and without changing contents; the bound tracks
-      ``spark.sql.shuffle.partitions`` (scale-adaptive config, not a
-      local constant).
-    Returns the pinned frames in input order."""
+    - Serial: a round's frames share intra-round caches, so concurrent
+      pins would race to fill the same cold cache partitions.
+    - Each frame is coalesced to at most ``spark.sql.shuffle.partitions``
+      partitions first (no shuffle, contents unchanged), so the pinned
+      partition count cannot grow with every round's union."""
     out = []
     for d in dfs:
         cap = int(d.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        # coalesce never raises a partition count, so this is a no-op
-        # for already-bounded inputs
         out.append(d.coalesce(cap).localCheckpoint())
     return out
 
@@ -262,10 +248,9 @@ def save_state(
         )
         compacted["url_seen"] = state.round_no
         compacted["workshops"] = state.round_no
-        # Metrics deltas exist only through the PREVIOUS round (the
-        # caller appends this round's metrics after save_state, so its
-        # duration can include the checkpoint write) — compact ≤ r-1
-        # from disk.
+        # Metrics deltas exist only through the PREVIOUS round (crawl()
+        # writes this round's metrics after save_state returns) —
+        # compact ≤ r-1 from disk.
         spark = state.frontier.sparkSession
         mdirs = _delta_dirs(
             ckpt_dir,
@@ -387,7 +372,12 @@ def load_state(spark: SparkSession, ckpt_dir: str, round_no: int | None = None) 
 def load_metrics(spark: SparkSession, ckpt_dir: str, round_no: int | None = None):
     """Per-round / per-partition crawl metrics through ``round_no``
     (LATEST by default) — compacted base + deltas, same bounded-read
-    scheme as the state tables."""
+    scheme as the state tables.
+
+    ``duration_ms`` is the same for every row of a round: the span from
+    the round's ``run_round`` call until its new state is pinned and the
+    seen-filter sidecar (if any) updated — the round's own critical
+    path, excluding its checkpoint writes."""
     if round_no is None:
         with open(os.path.join(ckpt_dir, "LATEST")) as f:
             round_no = int(f.read().strip())
@@ -436,21 +426,19 @@ def crawl(
 ) -> CrawlResult:
     """Drive ``n_rounds`` scheduler rounds with per-round checkpoints.
 
-    ``async_checkpoint=True`` overlaps round N's checkpoint writes with
-    round N+1's plan construction: the new state is pinned in executor
-    storage (``localCheckpoint`` — frontier whole, url_seen/workshops
-    as base + per-round deltas mirroring the on-disk layout, deltas
-    collapsed at every ``compact_every`` boundary), the parquet writes
-    stream from those pinned blocks on a background thread, and the
-    next round starts immediately from the in-memory state instead of
-    re-reading the checkpoint.  Results and resume semantics are
-    IDENTICAL (the manifest still commits only after its round's
-    writes land, and round N+1's writes wait for round N's); what
-    changes is WHO waits — measured 1.45–1.59× on the bench_frontier
-    workload in a verified-quiet window (BENCH/BASELINE.md §2f;
-    interleaved A/B legs).  Cost: the pinned state lives in executor
-    memory/disk between rounds (MEMORY_AND_DISK semantics), which is
-    what a long-lived cluster crawl wants anyway.
+    Every round pins its new state in executor storage
+    (``localCheckpoint`` — frontier whole, url_seen/workshops as base +
+    per-round deltas mirroring the on-disk layout, deltas collapsed at
+    every ``compact_every`` boundary) and the next round starts from
+    that in-memory state; the round's parquet writes stream from the
+    pinned blocks on a writer thread.  ``async_checkpoint`` only picks
+    where the crawl waits for those writes: ``False`` waits before the
+    next round starts (and then releases the round's caches); ``True``
+    lets them overlap the next round's compute and waits only before
+    that round's own writes launch.  Results, checkpoints and resume are
+    identical either way (the manifest commits only after its round's
+    writes land).  The pinned state lives in executor memory/disk
+    between rounds (MEMORY_AND_DISK semantics).
 
     ``resume=True`` continues from the LATEST checkpoint in ckpt_dir —
     the reference's restart-from-state-files behavior, but exact.
@@ -524,8 +512,8 @@ def crawl(
     # stale UNDER-count — exactly the OOM the broadcast guard exists to
     # prevent.  Refresh it every few rounds from the frontier's distinct
     # domain count (an upper bound on pending domains; one cheap job
-    # over the freshly-checkpointed parquet).  Order-of-magnitude
-    # accuracy is all the join-strategy pick needs.
+    # over the pinned frontier).  Order-of-magnitude accuracy is all
+    # the join-strategy pick needs.
     HINT_REFRESH_ROUNDS = 8
     n_domains_hint = robots.count()
     t0 = time.time()
@@ -544,209 +532,120 @@ def crawl(
             store_factory=bloom_store_factory,
         )
     rounds_done = 0
-    # async_checkpoint machinery: writes of round N run on this pool
-    # while the driver builds round N+1's plan; the futures are joined
-    # before round N+1's own writes launch (manifest/pointer chain) and
-    # before the crawl returns.
-    writer_pool = ThreadPoolExecutor(max_workers=4) if async_checkpoint else None
-    pending_writes: list = []
-    prev_out: RoundOutputs | None = None
-    mem_seen: DataFrame | None = None
-    mem_workshops: DataFrame | None = None
-    if async_checkpoint:
-        # one-time full pin of the resumed/initial append-only tables;
-        # per-round deltas stack on top (mirrors the on-disk layout)
-        mem_seen, mem_workshops = _pin_parallel(
-            [state.url_seen, state.workshops]
-        )
-        state = CrawlState(
-            state.frontier, mem_seen, mem_workshops, state.round_no
-        )
+    # One-time full pin of the resumed/initial append-only tables;
+    # per-round deltas stack on top (mirrors the on-disk layout).
+    mem_seen, mem_workshops = _pin([state.url_seen, state.workshops])
+    state = CrawlState(state.frontier, mem_seen, mem_workshops, state.round_no)
 
-    def _join_pending() -> None:
-        err: Exception | None = None
-        for fut in pending_writes:
-            try:
-                fut.result()
-            except Exception as e:  # noqa: BLE001 — re-raised below
-                err = err or e
-        pending_writes.clear()
-        if err is not None:
-            raise err
-
-    while state.round_no < target:
-        if rounds_done and rounds_done % HINT_REFRESH_ROUNDS == 0:
-            n_domains_hint = max(
-                n_domains_hint,
-                state.frontier.select("domain").distinct().count(),
+    def _write_round(
+        st: CrawlState, out: RoundOutputs, seen_delta, ws_delta, duration_ms: int
+    ) -> None:
+        """Round ``st.round_no``'s checkpoint, read from pinned state and
+        the round's caches: state and edges delta in one parallel write
+        window, then the metrics delta."""
+        writes = [
+            lambda: save_state(
+                st,
+                ckpt_dir,
+                incremental=incremental_frontier,
+                touched_domains=out.touched_domains,
+                n_buckets=n_buckets,
+                compact_every=compact_every,
+                seen_delta=seen_delta,
+                workshops_delta=ws_delta,
             )
-        rounds_done += 1
-        t_round = time.time()
-        state, out = run_round(
-            spark, state, pages_prepared, robots, bloom_dir=bloom_dir,
-            pages_fallback=pages_fallback, expected_domains=n_domains_hint,
-            bloom_store_factory=bloom_store_factory, seen_filter=seen_filter,
-            track_edges=track_edges, global_budget=global_budget,
+        ]
+        if track_edges and out.edges is not None:
+            # Per-round link-graph delta (src_hash, dst_hash) — the input
+            # to offline frontier re-prioritization
+            # (operators/linkrank.py::reprioritize_frontier).
+            writes.append(
+                lambda: out.edges.write.mode("overwrite").parquet(
+                    os.path.join(ckpt_dir, "edges", f"round={st.round_no}")
+                )
+            )
+        _run_parallel(writes)
+        (
+            out.metrics.withColumn("duration_ms", F.lit(duration_ms))
+            .write.mode("overwrite")
+            .parquet(os.path.join(ckpt_dir, "metrics", f"round={st.round_no}"))
         )
-        batch_count = out.materialize()
-        if async_checkpoint:
-            # Pin this round's new state in executor storage (flat
-            # lineage, computed from the round's caches): frontier
-            # whole — it's the mutating priority queue — plus the two
-            # append-only deltas; the in-memory tables become
-            # base ∪ deltas, collapsed at every compact boundary so
-            # the union tree stays ≤ compact_every deep, exactly like
-            # the on-disk layout save_state writes.
-            rno = state.round_no
-            # Round 5: pin the round's own delta frames (exposed by
-            # run_round) instead of filtering the full url_seen /
-            # workshops unions — the old form re-scanned the ENTIRE
-            # in-memory seen table every round to recover exactly
-            # these rows, an O(state)-per-round cost that compounds
-            # over a long crawl.
-            frontier_pin, seen_delta, ws_delta = _pin_parallel(
-                [
-                    state.frontier,
-                    out.seen_delta,
-                    out.workshops_delta,
-                ]
+
+    # (future, RoundOutputs) of the round whose writes are in flight;
+    # its caches stay alive until _wait() has joined the writes.
+    pending = None
+
+    def _wait() -> None:
+        nonlocal pending
+        if pending is None:
+            return
+        fut, done = pending
+        pending = None
+        fut.result()
+        if not collect_outputs:
+            done.unpersist()
+
+    with ThreadPoolExecutor(max_workers=1) as writer_pool:
+        while state.round_no < target:
+            if rounds_done and rounds_done % HINT_REFRESH_ROUNDS == 0:
+                n_domains_hint = max(
+                    n_domains_hint,
+                    state.frontier.select("domain").distinct().count(),
+                )
+            rounds_done += 1
+            t_round = time.time()
+            state, out = run_round(
+                spark, state, pages_prepared, robots, bloom_dir=bloom_dir,
+                pages_fallback=pages_fallback, expected_domains=n_domains_hint,
+                bloom_store_factory=bloom_store_factory, seen_filter=seen_filter,
+                track_edges=track_edges, global_budget=global_budget,
+            )
+            batch_count = out.materialize()
+            # Pin the new frontier whole (the mutating priority queue)
+            # plus the round's own append-only deltas (O(delta), not a
+            # re-filter of the full tables); the in-memory tables become
+            # base ∪ deltas, collapsed at every compact boundary so the
+            # union tree stays ≤ compact_every deep, like the on-disk
+            # layout save_state writes.
+            frontier_pin, seen_delta, ws_delta = _pin(
+                [state.frontier, out.seen_delta, out.workshops_delta]
             )
             mem_seen = mem_seen.unionByName(seen_delta)
             mem_workshops = mem_workshops.unionByName(ws_delta)
-            if compact_every and rno % compact_every == 0:
-                mem_seen, mem_workshops = _pin_parallel(
-                    [mem_seen, mem_workshops]
-                )
-            pinned_state = CrawlState(frontier_pin, mem_seen, mem_workshops, rno)
-            # round N-1's writes must land before round N's launch
-            # (manifest chain + bucket pointers); this is the only
-            # wait, and it normally completed during this round's
-            # compute.  Only after the join may N-1's caches go.
-            _join_pending()
-            if prev_out is not None and not collect_outputs:
-                prev_out.unpersist()
-            duration_ms = int((time.time() - t_round) * 1000)
-            # Default-arg binding on EVERY closure below: the writes
-            # run on the pool concurrently with the next round, which
-            # rebinds pinned_state/out/seen_delta — a by-reference
-            # capture could save the WRONG round's state if a slow
-            # write outlived this iteration (round 5 hardening).
-            writes = [
-                lambda ps=pinned_state, o=out, sd=seen_delta, wd=ws_delta: save_state(
-                    ps,
-                    ckpt_dir,
-                    incremental=incremental_frontier,
-                    touched_domains=o.touched_domains,
-                    n_buckets=n_buckets,
-                    compact_every=compact_every,
-                    seen_delta=sd,
-                    workshops_delta=wd,
-                )
-            ]
-            if track_edges and out.edges is not None:
-                writes.append(
-                    lambda out=out, rno=rno: out.edges.write.mode(
-                        "overwrite"
-                    ).parquet(os.path.join(ckpt_dir, "edges", f"round={rno}"))
-                )
+            if compact_every and state.round_no % compact_every == 0:
+                mem_seen, mem_workshops = _pin([mem_seen, mem_workshops])
+            state = CrawlState(frontier_pin, mem_seen, mem_workshops, state.round_no)
             if use_bloom:
-                # The sidecar is READ by the next round's compute
-                # (anti_join_with_filter): a mid-flight update could
-                # hand that probe a filter missing this round's keys,
-                # whose "definitely unseen" answer would bypass the
-                # exact verify — so unlike the parquet writes, the
-                # sidecar update stays ON the critical path.  It is
-                # O(this round's new keys), not O(state).
+                # The next round's anti-join READS the sidecar: a filter
+                # missing this round's keys would answer "definitely
+                # unseen" and bypass the exact verify, so the update
+                # stays on the critical path (O(this round's new keys)).
+                # Sidecar-before-manifest is crash-safe: a torn round can
+                # only add extra positives, which are exact-verified.
                 _filt.update_shards(
                     seen_delta.select("url_hash"),
                     bloom_dir,
                     store_factory=bloom_store_factory,
                 )
-
-            def _async_writes(
-                writes=writes,
-                metrics=out.metrics,
-                rno=rno,
-                duration_ms=duration_ms,
-            ):
-                _run_parallel(writes)
-                (
-                    metrics.withColumn("duration_ms", F.lit(duration_ms))
-                    .write.mode("overwrite")
-                    .parquet(os.path.join(ckpt_dir, "metrics", f"round={rno}"))
-                )
-
-            pending_writes.append(writer_pool.submit(_async_writes))
-            state = pinned_state
-            prev_out = out
+            duration_ms = int((time.time() - t_round) * 1000)
+            # The previous round's writes must land before this round's
+            # launch (manifest chain + bucket pointers).
+            _wait()
+            pending = (
+                writer_pool.submit(
+                    _write_round, state, out, seen_delta, ws_delta, duration_ms
+                ),
+                out,
+            )
+            if not async_checkpoint:
+                _wait()
             fetched_per_round.append(batch_count)
             if collect_outputs:
                 actions_per_round.append(out.actions.count())
                 outputs.append(out)
             else:
                 actions_per_round.append(0)
-            continue
-        # One parallel write window per round: the state checkpoint
-        # (itself internally parallel), the link-graph delta, and the
-        # seen-filter sidecar update are mutually independent jobs over
-        # cached round outputs.  Sidecar-before-manifest is crash-safe:
-        # filter positives are exact-verified against url_seen
-        # (anti_join_with_filter), so a torn round can only add
-        # harmless extra positives, never wrong results.
-        round_writes = [
-            lambda: save_state(
-                state,
-                ckpt_dir,
-                incremental=incremental_frontier,
-                touched_domains=out.touched_domains,
-                n_buckets=n_buckets,
-                compact_every=compact_every,
-                seen_delta=out.seen_delta,
-                workshops_delta=out.workshops_delta,
-            )
-        ]
-        if track_edges and out.edges is not None:
-            # Per-round link-graph delta (src_hash, dst_hash) — the
-            # input to offline frontier re-prioritization
-            # (operators/linkrank.py::reprioritize_frontier).  Same
-            # round-dir layout as the other state deltas.
-            round_writes.append(
-                lambda: out.edges.write.mode("overwrite").parquet(
-                    os.path.join(ckpt_dir, "edges", f"round={state.round_no}")
-                )
-            )
-        if use_bloom:
-            round_writes.append(
-                lambda: _filt.update_shards(
-                    out.seen_delta.select("url_hash"),
-                    bloom_dir,
-                    store_factory=bloom_store_factory,
-                )
-            )
-        _run_parallel(round_writes)
-        # Reload from the checkpoint — flat lineage for the next round.
-        state = load_state(spark, ckpt_dir, state.round_no)
-        duration_ms = int((time.time() - t_round) * 1000)
-        (
-            out.metrics.withColumn("duration_ms", F.lit(duration_ms))
-            .write.mode("overwrite")
-            .parquet(
-                os.path.join(ckpt_dir, "metrics", f"round={state.round_no}")
-            )
-        )
-        if collect_outputs:
-            fetched_per_round.append(batch_count)
-            actions_per_round.append(out.actions.count())
-            outputs.append(out)
-        else:
-            fetched_per_round.append(batch_count)
-            actions_per_round.append(0)
-            out.unpersist()
-    if async_checkpoint:
-        _join_pending()
-        writer_pool.shutdown(wait=True)
-        if prev_out is not None and not collect_outputs:
-            prev_out.unpersist()
+        _wait()
     pages_prepared.unpersist()
     if pages_fallback is not None:
         pages_fallback.unpersist()

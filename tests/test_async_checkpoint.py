@@ -2,6 +2,7 @@
 final state, per-round checkpoints, resume, metrics, seen-filter
 results."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from pyppeteer_scraper_spark.plans.checkpoint import (
@@ -92,3 +93,42 @@ def test_async_with_bloom_and_incremental(spark, sf_small, tmp_path):
         .count()
     )
     assert dup == 0
+
+
+@pytest.fixture(scope="module", params=[False, True], ids=["sync", "async"])
+def bucketed_crawl(request, spark, sf_small, tmp_path_factory):
+    """A 3-round crawl with a bucketed frontier and a compaction at
+    round 2, in each checkpoint mode: (result, checkpoint dir)."""
+    t = generate_crawl_tables(spark, sf_small)
+    ckpt = str(tmp_path_factory.mktemp("bucketed"))
+    res = crawl(
+        spark, t["pages"], t["seeds"], t["robots"], 3, ckpt,
+        incremental_frontier=True, n_buckets=8, compact_every=2,
+        async_checkpoint=request.param,
+    )
+    return res, ckpt
+
+
+def test_checkpoint_equals_in_memory_state(spark, bucketed_crawl):
+    """No round reads its own checkpoint back, so the last checkpoint
+    must hold exactly the state the crawl carried in memory."""
+    res, ckpt = bucketed_crawl
+    assert res.state.round_no == 3
+    assert _state_snapshot(load_state(spark, ckpt, 3)) == _state_snapshot(res.state)
+
+
+def test_duration_ms_every_round(spark, bucketed_crawl):
+    _, ckpt = bucketed_crawl
+    m = load_metrics(spark, ckpt, 3)
+    per_round = {
+        r["round"]: (r["rows"], r["ok"])
+        for r in m.groupBy("round")
+        .agg(
+            F.count("*").alias("rows"),
+            F.sum((F.col("duration_ms") > 0).cast("int")).alias("ok"),
+        )
+        .collect()
+    }
+    assert set(per_round) == {1, 2, 3}
+    for rows, ok in per_round.values():
+        assert rows > 0 and ok == rows

@@ -105,6 +105,56 @@ def test_quality_model_xxhash_path(spark):
         quality_model_score(F.col("text"), hash_fn="sha1")
 
 
+def test_quality_model_scored_equals_column_form(spark):
+    """The staged DataFrame form must return exactly the Column form's
+    rows — exceptAll both ways — including empty, null, punctuation-only
+    and 1-token texts."""
+    from pyppeteer_scraper_spark.functions.classifier import (
+        quality_model_score,
+        quality_model_scored,
+    )
+
+    texts = [
+        "The quick brown fox jumps over the lazy dog.",
+        "spark spark spark",
+        "",
+        None,
+        "  ...!!!  ",
+        "word",
+        "Mixed CASE, punct -- and   runs\tof\nspace",
+    ]
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    cols = quality_model_score(F.col("text"))
+    column_form = docs.select(
+        "doc_id",
+        cols["n_grams"].alias("n_grams"),
+        cols["score_raw"].alias("score_raw"),
+        cols["score"].alias("score"),
+    )
+    staged = quality_model_scored(docs, carry=("doc_id",))
+    assert staged.columns == column_form.columns
+    assert staged.exceptAll(column_form).count() == 0
+    assert column_form.exceptAll(staged).count() == 0
+    assert staged.count() == len(texts)
+
+
+def test_quality_model_scored_rejects_clashing_carry(spark):
+    import pytest as _pytest
+
+    from pyppeteer_scraper_spark.functions.classifier import (
+        quality_model_scored,
+    )
+
+    docs = spark.createDataFrame([(1, "a b", 0.5)], "doc_id long, text string, score double")
+    for name in ("__toks", "__grams", "n_grams", "score_raw", "score"):
+        with _pytest.raises(ValueError, match=name):
+            quality_model_scored(docs, carry=("doc_id", name))
+    # a disjoint carry is accepted
+    assert quality_model_scored(docs, carry=("doc_id", "text")).count() == 1
+
+
 def test_nfc_normalize_udf(spark):
     from pyppeteer_scraper_spark.functions.text import nfc_normalize_udf
 

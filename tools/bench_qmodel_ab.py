@@ -3,10 +3,11 @@ elimination already share the gram/bucket subtrees that
 ``quality_model_score`` repeats across its three returned columns —
 or do n_grams / score_raw / score each re-tokenize and re-hash?
 
-Variant A = the shipped one-projection form (queries select all three
-columns from one dict).  Variant B = staged projections: toks →
-grams → raw/n → score, each referenced by column.  Outputs must be
-row-identical; only evaluation count may differ.
+Variant A = the Column form (``quality_model_score``; a query selects
+all three columns from one dict).  Variant B = the staged DataFrame
+form ``quality_model_scored``: toks → grams → raw/n → score, each
+referenced by column.  Outputs must be row-identical; only evaluation
+count may differ.
 
 Usage: python tools/bench_qmodel_ab.py [sf_dir] [reps]
 """
@@ -30,9 +31,8 @@ def main() -> None:
     from pyppeteer_scraper_spark.session import get_spark
     from pyppeteer_scraper_spark.sources.tables import load_table
     from pyppeteer_scraper_spark.functions.classifier import (
-        _WEIGHT_SPAN,
-        default_weights,
         quality_model_score,
+        quality_model_scored,
     )
 
     spark = get_spark("qmodel_ab", cores=os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -41,7 +41,7 @@ def main() -> None:
     def force(df):
         df.write.format("noop").mode("overwrite").save()
 
-    # --- A: shipped one-projection form -------------------------------
+    # --- A: Column form, one projection --------------------------------
     def variant_a():
         cols = quality_model_score(F.col("text"))
         return docs.select(
@@ -51,59 +51,9 @@ def main() -> None:
             cols["score"].alias("score"),
         )
 
-    # --- B: staged projections (identical arithmetic) ------------------
+    # --- B: the shipped staged form ------------------------------------
     def variant_b():
-        w = default_weights()
-        warr = F.array(*[F.lit(int(x)) for x in w])
-        toks = F.filter(F.split(F.trim(F.lower(F.col("text"))), r"\W+"),
-                        lambda t: t != "")
-        s1 = docs.select("doc_id", toks.alias("__toks"))
-        n = F.size(F.col("__toks"))
-        bigrams = F.when(
-            n >= 2,
-            F.zip_with(
-                F.slice("__toks", 1, n - 1),
-                F.slice("__toks", 2, n - 1),
-                lambda a, b: F.concat_ws(" ", a, b),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        s2 = s1.select("doc_id", F.concat("__toks", bigrams).alias("__grams"))
-        buckets = F.transform(
-            F.col("__grams"),
-            lambda g: F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat_ws("\x1f", F.lit("qmodel-v1"), g)), 1, 6
-                    ),
-                    16,
-                    10,
-                ).cast("bigint"),
-                F.lit(len(w)),
-            ),
-        )
-        raw = F.aggregate(
-            buckets,
-            F.lit(0).cast("bigint"),
-            lambda acc, b: acc
-            + F.element_at(warr, (b + 1).cast("int")).cast("bigint"),
-        )
-        s3 = s2.select(
-            "doc_id",
-            F.size("__grams").cast("long").alias("n_grams"),
-            raw.alias("score_raw"),
-        )
-        x = F.col("score_raw").cast("double") / (
-            F.col("n_grams").cast("double") * float(_WEIGHT_SPAN)
-        )
-        return s3.select(
-            "doc_id",
-            "n_grams",
-            "score_raw",
-            F.when(
-                F.col("n_grams") > 0,
-                F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-x)), 6),
-            ).otherwise(F.lit(0.5)).alias("score"),
-        )
+        return quality_model_scored(docs, carry=("doc_id",))
 
     # warm-up
     force(docs.select("doc_id").limit(10))
