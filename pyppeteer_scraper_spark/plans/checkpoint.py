@@ -50,16 +50,16 @@ def _bucket_col(n_buckets: int):
 
 
 def _run_parallel(thunks) -> None:
-    """Submit independent Spark write jobs from threads so their fixed
+    """Run independent Spark write jobs from threads so their fixed
     per-job scheduling latency overlaps (Spark's scheduler interleaves
-    concurrently-submitted jobs across the executor pool; with 3-4
-    writes per round the serial form pays 3-4x the fixed latency, which
-    is exactly the seconds-scale floor that caps full-crawl scaling
-    efficiency — BENCH/BASELINE.md §2).  All thunks read either cached
-    intra-round DataFrames or the in-memory state tables, so concurrent
-    scans do not recompute heavy lineage.  Exceptions propagate: the
-    caller must not commit the manifest if any write failed."""
-    thunks = [t for t in thunks if t is not None]
+    concurrently-submitted jobs across the executor pool; a round's
+    write window holds up to eight writes, and the serial form pays
+    their fixed latencies one after another — the seconds-scale floor
+    that caps full-crawl scaling efficiency, BENCH/BASELINE.md §2).  All
+    thunks read pinned state or the round's cached frames, so concurrent
+    scans do not recompute heavy lineage.  Waits for every thunk, then
+    re-raises the first failure: ``save_state`` commits nothing unless
+    all of them landed."""
     if len(thunks) == 1:
         thunks[0]()
         return
@@ -85,6 +85,16 @@ def _pin(dfs: list[DataFrame]) -> list[DataFrame]:
     return out
 
 
+def read_manifest(ckpt_dir: str, round_no: int | None = None) -> dict:
+    """Manifest of round ``round_no`` — by default of the last committed
+    round, the one ``LATEST`` points at."""
+    if round_no is None:
+        with open(os.path.join(ckpt_dir, "LATEST")) as f:
+            round_no = int(f.read().strip())
+    with open(os.path.join(ckpt_dir, f"round={round_no}", "manifest.json")) as f:
+        return json.load(f)
+
+
 def save_state(
     state: CrawlState,
     ckpt_dir: str,
@@ -95,8 +105,15 @@ def save_state(
     compact_every: int | None = COMPACT_EVERY,
     seen_delta: DataFrame | None = None,
     workshops_delta: DataFrame | None = None,
+    metrics: DataFrame | None = None,
+    edges: DataFrame | None = None,
 ) -> str:
-    """Persist round state.
+    """Write round ``state.round_no``'s checkpoint and commit it.
+
+    Every file of the round is written in one parallel window; only
+    after all of them have landed does ``round=N/manifest.json`` get
+    written, and then ``LATEST`` moves to N.  A write that fails leaves
+    ``LATEST`` at the previous round, so a resume redoes the whole round.
 
     - ``frontier``: full rewrite by default (the mutating priority
       queue).  With ``touched_domains`` (incremental mode) the frontier
@@ -112,6 +129,9 @@ def save_state(
       only its delta (rows first seen this round).  Rewriting them in
       full would be O(entire crawl history) per round — fatal at
       10^10-URL scale; deltas keep the round cost O(new URLs).
+    - ``metrics`` (the round's ``scraper_runs`` rows) and ``edges`` (its
+      link-graph delta) are written when given, to
+      ``metrics/round=N`` and ``edges/round=N``.
     - every ``compact_every`` rounds the deltas are additionally merged
       into ``compacted/{table}/round=N`` and the manifest's
       ``compacted`` pointers advance, so a load reads ≤ 1 compacted dir
@@ -121,41 +141,37 @@ def save_state(
       so earlier rounds stay loadable (Iceberg snapshot-expiry would
       reclaim them on a real deploy).  Compaction cost is
       O(state size) every k rounds ⇒ amortized O(state/k) per round —
-      bounded, unlike the O(rounds) load it prevents.
+      bounded, unlike the O(rounds) load it prevents.  Metrics compact
+      from disk and only through round N-1, whose delta is committed.
     """
+    rn = state.round_no
+    spark = state.frontier.sparkSession
     if n_partitions is None:
         # Writer parallelism follows the session (I/O scales with cores).
-        n_partitions = int(
-            state.frontier.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    rdir = os.path.join(ckpt_dir, f"round={state.round_no}")
-    prev_manifest: dict = {}
-    if state.round_no > 0:
-        prev_path = os.path.join(
-            ckpt_dir, f"round={state.round_no - 1}", "manifest.json"
-        )
-        if os.path.isfile(prev_path):
-            with open(prev_path) as f:
-                prev_manifest = json.load(f)
+        n_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    rdir = os.path.join(ckpt_dir, f"round={rn}")
+    prev_manifest = read_manifest(ckpt_dir, rn - 1) if rn > 0 else {}
     compacted: dict[str, int] = dict(prev_manifest.get("compacted", {}))
     frontier_meta: dict = {"layout": "full"}
-    # All per-round writes are INDEPENDENT jobs over cached/in-memory
-    # inputs — submit them concurrently (_run_parallel) and only then
-    # commit the manifest.  Serial submission paid one fixed job-setup
-    # latency per table per round, the floor that capped full-crawl
-    # N→4N scaling at 0.27 (VERDICT r03 #8).
+    # All of the round's writes are INDEPENDENT jobs over pinned or
+    # cached inputs — submit them concurrently (_run_parallel) and only
+    # then commit.  Serial submission paid one fixed job-setup latency
+    # per table per round, the floor that capped full-crawl N→4N
+    # scaling at 0.27 (VERDICT r03 #8).
     writes = []
+
+    def write(df: DataFrame, *path: str) -> None:
+        writes.append(
+            lambda: df.write.mode("overwrite").parquet(os.path.join(ckpt_dir, *path))
+        )
+
     if incremental:
-        bdir = os.path.join(ckpt_dir, "frontier_buckets", f"round={state.round_no}")
+        bdir = os.path.join(ckpt_dir, "frontier_buckets", f"round={rn}")
         fb = state.frontier.withColumn("__bucket", _bucket_col(n_buckets))
         pointers: dict[str, int] = {}
-        if state.round_no > 0:
-            prev_meta = prev_manifest.get("frontier", {"layout": "full"})
-            if (
-                prev_meta["layout"] == "bucketed"
-                and prev_meta.get("n_buckets") == n_buckets
-            ):
-                pointers = dict(prev_meta["pointers"])
+        prev_meta = prev_manifest.get("frontier", {"layout": "full"})
+        if prev_meta["layout"] == "bucketed" and prev_meta.get("n_buckets") == n_buckets:
+            pointers = dict(prev_meta["pointers"])
         if touched_domains is not None and pointers:
             # prior round is bucket-consistent → rewrite ONLY touched
             # buckets; otherwise fall through to an all-bucket write
@@ -171,7 +187,7 @@ def save_state(
             "pointers": pointers,
         }
 
-        def _write_frontier_bucketed(fb=fb, pointers=pointers):
+        def _write_frontier_bucketed():
             (
                 fb.repartition(n_buckets, "__bucket")
                 .write.mode("overwrite")
@@ -183,100 +199,56 @@ def save_state(
             # read after the parallel join, before the manifest commit)
             for name in os.listdir(bdir):
                 if name.startswith("__bucket="):
-                    pointers[name.split("=", 1)[1]] = state.round_no
+                    pointers[name.split("=", 1)[1]] = rn
 
         writes.append(_write_frontier_bucketed)
     else:
-        writes.append(
-            lambda: state.frontier.repartition(n_partitions, "domain")
-            .write.mode("overwrite")
-            .parquet(os.path.join(rdir, "frontier"))
+        write(
+            state.frontier.repartition(n_partitions, "domain"), f"round={rn}", "frontier"
         )
-    if state.round_no > 0:
-        # Round 5: callers that already hold the round's delta frames
-        # (run_round exposes them) pass them in, so the append-only
-        # writes never re-filter the full in-memory unions — O(delta)
-        # per round instead of O(state).
-        sd = (
-            seen_delta
-            if seen_delta is not None
-            else state.url_seen.filter(
-                F.col("first_seen_round") == state.round_no
-            )
-        )
-        wd = (
-            workshops_delta
-            if workshops_delta is not None
-            else state.workshops.filter(
-                F.col("discovered_round") == state.round_no
-            )
-        )
-        writes.append(
-            lambda: sd.repartition(n_partitions, "url_hash")
-            .write.mode("overwrite")
-            .parquet(os.path.join(ckpt_dir, "url_seen", f"round={state.round_no}"))
-        )
-        writes.append(
-            lambda: wd.coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(ckpt_dir, "workshops", f"round={state.round_no}"))
-        )
-    if (
-        compact_every
-        and state.round_no > 0
-        and state.round_no % compact_every == 0
-    ):
+    if rn > 0:
+        # Callers that already hold the round's delta frames (run_round
+        # exposes them) pass them in, so the append-only writes never
+        # re-filter the full in-memory unions — O(delta) per round
+        # instead of O(state).
+        if seen_delta is None:
+            seen_delta = state.url_seen.filter(F.col("first_seen_round") == rn)
+        if workshops_delta is None:
+            workshops_delta = state.workshops.filter(F.col("discovered_round") == rn)
+        write(seen_delta.repartition(n_partitions, "url_hash"), "url_seen", f"round={rn}")
+        write(workshops_delta.coalesce(1), "workshops", f"round={rn}")
+    if metrics is not None:
+        write(metrics, "metrics", f"round={rn}")
+    if edges is not None:
+        # Per-round link-graph delta (src_hash, dst_hash) — the input to
+        # offline frontier re-prioritization
+        # (operators/linkrank.py::reprioritize_frontier).
+        write(edges, "edges", f"round={rn}")
+    if compact_every and rn > 0 and rn % compact_every == 0:
         # The in-memory state IS the full table (compacted-so-far +
         # deltas) — write it once as the new base.
-        writes.append(
-            lambda: state.url_seen.repartition(n_partitions, "url_hash")
-            .write.mode("overwrite")
-            .parquet(
-                os.path.join(
-                    ckpt_dir, "compacted", "url_seen", f"round={state.round_no}"
-                )
-            )
+        write(
+            state.url_seen.repartition(n_partitions, "url_hash"),
+            "compacted", "url_seen", f"round={rn}",
         )
-        writes.append(
-            lambda: state.workshops.coalesce(1)
-            .write.mode("overwrite")
-            .parquet(
-                os.path.join(
-                    ckpt_dir, "compacted", "workshops", f"round={state.round_no}"
-                )
-            )
-        )
-        compacted["url_seen"] = state.round_no
-        compacted["workshops"] = state.round_no
-        # Metrics deltas exist only through the PREVIOUS round (crawl()
-        # writes this round's metrics after save_state returns) —
-        # compact ≤ r-1 from disk.
-        spark = state.frontier.sparkSession
+        write(state.workshops.coalesce(1), "compacted", "workshops", f"round={rn}")
+        compacted["url_seen"] = rn
+        compacted["workshops"] = rn
+        # This round's metrics delta is being written in the same window,
+        # so the metrics base covers ≤ r-1, read back from disk.
         mdirs = _delta_dirs(
-            ckpt_dir,
-            "metrics",
-            state.round_no - 1,
-            compacted.get("metrics", 0),
+            ckpt_dir, "metrics", rn - 1, compacted.get("metrics", 0),
             compacted_table="metrics",
         )
         if mdirs:
-            writes.append(
-                lambda: spark.read.parquet(*mdirs)
-                .coalesce(max(1, n_partitions // 8))
-                .write.mode("overwrite")
-                .parquet(
-                    os.path.join(
-                        ckpt_dir,
-                        "compacted",
-                        "metrics",
-                        f"round={state.round_no - 1}",
-                    )
-                )
+            write(
+                spark.read.parquet(*mdirs).coalesce(max(1, n_partitions // 8)),
+                "compacted", "metrics", f"round={rn - 1}",
             )
-            compacted["metrics"] = state.round_no - 1
+            compacted["metrics"] = rn - 1
     _run_parallel(writes)
     manifest = {
-        "round_no": state.round_no,
+        "round_no": rn,
         "n_partitions": n_partitions,
         "tables": STATE_TABLES,
         "frontier": frontier_meta,
@@ -288,7 +260,7 @@ def save_state(
     # Latest-pointer, written last (commit point — a torn checkpoint is
     # simply not pointed at, so resume always sees a complete round).
     with open(os.path.join(ckpt_dir, "LATEST"), "w") as f:
-        f.write(str(state.round_no))
+        f.write(str(rn))
     return rdir
 
 
@@ -332,16 +304,12 @@ def _load_deltas(
 
 
 def load_state(spark: SparkSession, ckpt_dir: str, round_no: int | None = None) -> CrawlState:
+    """State as committed at round ``round_no`` (LATEST by default)."""
     from pyppeteer_scraper_spark.plans.round import WORKSHOPS_SCHEMA_DDL
     from pyppeteer_scraper_spark.schemas import URL_SEEN_SCHEMA
 
-    if round_no is None:
-        with open(os.path.join(ckpt_dir, "LATEST")) as f:
-            round_no = int(f.read().strip())
-    rdir = os.path.join(ckpt_dir, f"round={round_no}")
-    with open(os.path.join(rdir, "manifest.json")) as f:
-        manifest = json.load(f)
-    assert manifest["round_no"] == round_no
+    manifest = read_manifest(ckpt_dir, round_no)
+    round_no = manifest["round_no"]
     fmeta = manifest.get("frontier", {"layout": "full"})
     compacted = manifest.get("compacted", {})
     if fmeta["layout"] == "bucketed":
@@ -354,7 +322,9 @@ def load_state(spark: SparkSession, ckpt_dir: str, round_no: int | None = None) 
         ]
         frontier = spark.read.parquet(*paths)
     else:
-        frontier = spark.read.parquet(os.path.join(rdir, "frontier"))
+        frontier = spark.read.parquet(
+            os.path.join(ckpt_dir, f"round={round_no}", "frontier")
+        )
     return CrawlState(
         frontier=frontier,
         url_seen=_load_deltas(
@@ -378,21 +348,13 @@ def load_metrics(spark: SparkSession, ckpt_dir: str, round_no: int | None = None
     the round's ``run_round`` call until its new state is pinned and the
     seen-filter sidecar (if any) updated — the round's own critical
     path, excluding its checkpoint writes."""
-    if round_no is None:
-        with open(os.path.join(ckpt_dir, "LATEST")) as f:
-            round_no = int(f.read().strip())
-    with open(os.path.join(ckpt_dir, f"round={round_no}", "manifest.json")) as f:
-        manifest = json.load(f)
-    dirs = _delta_dirs(
-        ckpt_dir, "metrics", round_no, manifest.get("compacted", {}).get("metrics", 0)
-    )
-    schema = (
+    manifest = read_manifest(ckpt_dir, round_no)
+    return _load_deltas(
+        spark, ckpt_dir, "metrics",
         "round int, partition_id int, fetched long, deduped long, "
-        "emitted long, duration_ms long"
+        "emitted long, duration_ms long",
+        manifest["round_no"], manifest.get("compacted", {}).get("metrics", 0),
     )
-    if not dirs:
-        return spark.createDataFrame([], schema)
-    return spark.read.parquet(*dirs)
 
 
 @dataclass
@@ -430,15 +392,19 @@ def crawl(
     (``localCheckpoint`` — frontier whole, url_seen/workshops as base +
     per-round deltas mirroring the on-disk layout, deltas collapsed at
     every ``compact_every`` boundary) and the next round starts from
-    that in-memory state; the round's parquet writes stream from the
-    pinned blocks on a writer thread.  ``async_checkpoint`` only picks
-    where the crawl waits for those writes: ``False`` waits before the
-    next round starts (and then releases the round's caches); ``True``
-    lets them overlap the next round's compute and waits only before
-    that round's own writes launch.  Results, checkpoints and resume are
-    identical either way (the manifest commits only after its round's
-    writes land).  The pinned state lives in executor memory/disk
-    between rounds (MEMORY_AND_DISK semantics).
+    that in-memory state.  The round's checkpoint is one ``save_state``
+    call on a writer thread: it streams the state deltas, edges and
+    metrics from the pinned blocks and the round's caches, and moves
+    ``LATEST`` only after all of them have landed, so a crash at any
+    write resumes at the start of that round.  ``async_checkpoint`` only
+    picks where the crawl waits for those writes: ``False`` waits before
+    the next round starts (and then releases the round's caches);
+    ``True`` lets them overlap the next round's compute and waits only
+    before that round's own writes launch.  Results, checkpoints and
+    resume are identical either way.  The pinned state lives in executor
+    memory/disk between rounds (MEMORY_AND_DISK semantics).  A crawl
+    that raises releases the page stores and every round cache it holds
+    before re-raising.
 
     ``resume=True`` continues from the LATEST checkpoint in ckpt_dir —
     the reference's restart-from-state-files behavior, but exact.
@@ -493,84 +459,10 @@ def crawl(
         )
     pages_prepared.cache().count()
 
-    if resume:
-        state = load_state(spark, ckpt_dir)
-    else:
-        state = init_state(spark, seeds)
-        save_state(
-            state, ckpt_dir, incremental=incremental_frontier, n_buckets=n_buckets,
-            compact_every=compact_every,
-        )
-
     fetched_per_round: list[int] = []
     actions_per_round: list[int] = []
     outputs: list[RoundOutputs] = []
-    # Domain-cardinality metadata for select_batch's join-strategy pick.
-    # The robots row count seeds the hint, but link discovery adds
-    # domains ABSENT from robots (select_batch left-joins, unknown
-    # domains default-allowed), so a crawl-long constant would become a
-    # stale UNDER-count — exactly the OOM the broadcast guard exists to
-    # prevent.  Refresh it every few rounds from the frontier's distinct
-    # domain count (an upper bound on pending domains; one cheap job
-    # over the pinned frontier).  Order-of-magnitude accuracy is all
-    # the join-strategy pick needs.
-    HINT_REFRESH_ROUNDS = 8
-    n_domains_hint = robots.count()
-    t0 = time.time()
-    target = state.round_no + n_rounds
-    bloom_dir = os.path.join(ckpt_dir, seen_filter) if use_bloom else None
-    if use_bloom:
-        if seen_filter == "cuckoo":
-            from pyppeteer_scraper_spark.operators import cuckoo as _filt
-        else:
-            from pyppeteer_scraper_spark.operators import bloom as _filt
-
-        # Build/rebuild from the FULL url_seen on first enable or param
-        # change — delta-only inserts would miss crawl history.
-        _filt.ensure_sidecar(
-            state.url_seen, bloom_dir, bloom_params,
-            store_factory=bloom_store_factory,
-        )
-    rounds_done = 0
-    # One-time full pin of the resumed/initial append-only tables;
-    # per-round deltas stack on top (mirrors the on-disk layout).
-    mem_seen, mem_workshops = _pin([state.url_seen, state.workshops])
-    state = CrawlState(state.frontier, mem_seen, mem_workshops, state.round_no)
-
-    def _write_round(
-        st: CrawlState, out: RoundOutputs, seen_delta, ws_delta, duration_ms: int
-    ) -> None:
-        """Round ``st.round_no``'s checkpoint, read from pinned state and
-        the round's caches: state and edges delta in one parallel write
-        window, then the metrics delta."""
-        writes = [
-            lambda: save_state(
-                st,
-                ckpt_dir,
-                incremental=incremental_frontier,
-                touched_domains=out.touched_domains,
-                n_buckets=n_buckets,
-                compact_every=compact_every,
-                seen_delta=seen_delta,
-                workshops_delta=ws_delta,
-            )
-        ]
-        if track_edges and out.edges is not None:
-            # Per-round link-graph delta (src_hash, dst_hash) — the input
-            # to offline frontier re-prioritization
-            # (operators/linkrank.py::reprioritize_frontier).
-            writes.append(
-                lambda: out.edges.write.mode("overwrite").parquet(
-                    os.path.join(ckpt_dir, "edges", f"round={st.round_no}")
-                )
-            )
-        _run_parallel(writes)
-        (
-            out.metrics.withColumn("duration_ms", F.lit(duration_ms))
-            .write.mode("overwrite")
-            .parquet(os.path.join(ckpt_dir, "metrics", f"round={st.round_no}"))
-        )
-
+    out = None
     # (future, RoundOutputs) of the round whose writes are in flight;
     # its caches stay alive until _wait() has joined the writes.
     pending = None
@@ -580,75 +472,141 @@ def crawl(
         if pending is None:
             return
         fut, done = pending
-        pending = None
         fut.result()
+        pending = None
         if not collect_outputs:
             done.unpersist()
 
-    with ThreadPoolExecutor(max_workers=1) as writer_pool:
-        while state.round_no < target:
-            if rounds_done and rounds_done % HINT_REFRESH_ROUNDS == 0:
-                n_domains_hint = max(
-                    n_domains_hint,
-                    state.frontier.select("domain").distinct().count(),
-                )
-            rounds_done += 1
-            t_round = time.time()
-            state, out = run_round(
-                spark, state, pages_prepared, robots, bloom_dir=bloom_dir,
-                pages_fallback=pages_fallback, expected_domains=n_domains_hint,
-                bloom_store_factory=bloom_store_factory, seen_filter=seen_filter,
-                track_edges=track_edges, global_budget=global_budget,
+    try:
+        if resume:
+            state = load_state(spark, ckpt_dir)
+        else:
+            state = init_state(spark, seeds)
+            save_state(
+                state, ckpt_dir, incremental=incremental_frontier,
+                n_buckets=n_buckets, compact_every=compact_every,
             )
-            batch_count = out.materialize()
-            # Pin the new frontier whole (the mutating priority queue)
-            # plus the round's own append-only deltas (O(delta), not a
-            # re-filter of the full tables); the in-memory tables become
-            # base ∪ deltas, collapsed at every compact boundary so the
-            # union tree stays ≤ compact_every deep, like the on-disk
-            # layout save_state writes.
-            frontier_pin, seen_delta, ws_delta = _pin(
-                [state.frontier, out.seen_delta, out.workshops_delta]
-            )
-            mem_seen = mem_seen.unionByName(seen_delta)
-            mem_workshops = mem_workshops.unionByName(ws_delta)
-            if compact_every and state.round_no % compact_every == 0:
-                mem_seen, mem_workshops = _pin([mem_seen, mem_workshops])
-            state = CrawlState(frontier_pin, mem_seen, mem_workshops, state.round_no)
-            if use_bloom:
-                # The next round's anti-join READS the sidecar: a filter
-                # missing this round's keys would answer "definitely
-                # unseen" and bypass the exact verify, so the update
-                # stays on the critical path (O(this round's new keys)).
-                # Sidecar-before-manifest is crash-safe: a torn round can
-                # only add extra positives, which are exact-verified.
-                _filt.update_shards(
-                    seen_delta.select("url_hash"),
-                    bloom_dir,
-                    store_factory=bloom_store_factory,
-                )
-            duration_ms = int((time.time() - t_round) * 1000)
-            # The previous round's writes must land before this round's
-            # launch (manifest chain + bucket pointers).
-            _wait()
-            pending = (
-                writer_pool.submit(
-                    _write_round, state, out, seen_delta, ws_delta, duration_ms
-                ),
-                out,
-            )
-            if not async_checkpoint:
-                _wait()
-            fetched_per_round.append(batch_count)
-            if collect_outputs:
-                actions_per_round.append(out.actions.count())
-                outputs.append(out)
+        # Domain-cardinality metadata for select_batch's join-strategy
+        # pick.  The robots row count seeds the hint, but link discovery
+        # adds domains ABSENT from robots (select_batch left-joins,
+        # unknown domains default-allowed), so a crawl-long constant
+        # would become a stale UNDER-count — exactly the OOM the
+        # broadcast guard exists to prevent.  Refresh it every few
+        # rounds from the frontier's distinct domain count (an upper
+        # bound on pending domains; one cheap job over the pinned
+        # frontier).  Order-of-magnitude accuracy is all the
+        # join-strategy pick needs.
+        HINT_REFRESH_ROUNDS = 8
+        n_domains_hint = robots.count()
+        t0 = time.time()
+        target = state.round_no + n_rounds
+        bloom_dir = os.path.join(ckpt_dir, seen_filter) if use_bloom else None
+        if use_bloom:
+            if seen_filter == "cuckoo":
+                from pyppeteer_scraper_spark.operators import cuckoo as _filt
             else:
-                actions_per_round.append(0)
-        _wait()
-    pages_prepared.unpersist()
-    if pages_fallback is not None:
-        pages_fallback.unpersist()
+                from pyppeteer_scraper_spark.operators import bloom as _filt
+
+            # Build/rebuild from the FULL url_seen on first enable or
+            # param change — delta-only inserts would miss crawl history.
+            _filt.ensure_sidecar(
+                state.url_seen, bloom_dir, bloom_params,
+                store_factory=bloom_store_factory,
+            )
+        rounds_done = 0
+        # One-time full pin of the resumed/initial append-only tables;
+        # per-round deltas stack on top (mirrors the on-disk layout).
+        mem_seen, mem_workshops = _pin([state.url_seen, state.workshops])
+        state = CrawlState(state.frontier, mem_seen, mem_workshops, state.round_no)
+
+        with ThreadPoolExecutor(max_workers=1) as writer_pool:
+            while state.round_no < target:
+                if rounds_done and rounds_done % HINT_REFRESH_ROUNDS == 0:
+                    n_domains_hint = max(
+                        n_domains_hint,
+                        state.frontier.select("domain").distinct().count(),
+                    )
+                rounds_done += 1
+                t_round = time.time()
+                state, out = run_round(
+                    spark, state, pages_prepared, robots, bloom_dir=bloom_dir,
+                    pages_fallback=pages_fallback, expected_domains=n_domains_hint,
+                    bloom_store_factory=bloom_store_factory, seen_filter=seen_filter,
+                    track_edges=track_edges, global_budget=global_budget,
+                )
+                batch_count = out.materialize()
+                # Pin the new frontier whole (the mutating priority queue)
+                # plus the round's own append-only deltas (O(delta), not a
+                # re-filter of the full tables); the in-memory tables
+                # become base ∪ deltas, collapsed at every compact
+                # boundary so the union tree stays ≤ compact_every deep,
+                # like the on-disk layout save_state writes.
+                frontier_pin, seen_delta, ws_delta = _pin(
+                    [state.frontier, out.seen_delta, out.workshops_delta]
+                )
+                mem_seen = mem_seen.unionByName(seen_delta)
+                mem_workshops = mem_workshops.unionByName(ws_delta)
+                if compact_every and state.round_no % compact_every == 0:
+                    mem_seen, mem_workshops = _pin([mem_seen, mem_workshops])
+                state = CrawlState(frontier_pin, mem_seen, mem_workshops, state.round_no)
+                if use_bloom:
+                    # The next round's anti-join READS the sidecar: a
+                    # filter missing this round's keys would answer
+                    # "definitely unseen" and bypass the exact verify, so
+                    # the update stays on the critical path (O(this
+                    # round's new keys)).  Sidecar-before-commit is
+                    # crash-safe: a torn round can only add extra
+                    # positives, which are exact-verified.
+                    _filt.update_shards(
+                        seen_delta.select("url_hash"),
+                        bloom_dir,
+                        store_factory=bloom_store_factory,
+                    )
+                duration_ms = int((time.time() - t_round) * 1000)
+                # The previous round's commit must land before this
+                # round's writes launch (manifest chain + bucket pointers).
+                _wait()
+                # One save_state call writes and commits the whole round.
+                # The name is looked up per round so a wrapper installed
+                # on this module's save_state sees every call.
+                pending = (
+                    writer_pool.submit(
+                        save_state,
+                        state,
+                        ckpt_dir,
+                        incremental=incremental_frontier,
+                        touched_domains=out.touched_domains,
+                        n_buckets=n_buckets,
+                        compact_every=compact_every,
+                        seen_delta=seen_delta,
+                        workshops_delta=ws_delta,
+                        metrics=out.metrics.withColumn(
+                            "duration_ms", F.lit(duration_ms)
+                        ),
+                        edges=out.edges,
+                    ),
+                    out,
+                )
+                if not async_checkpoint:
+                    _wait()
+                fetched_per_round.append(batch_count)
+                if collect_outputs:
+                    actions_per_round.append(out.actions.count())
+                    outputs.append(out)
+                else:
+                    actions_per_round.append(0)
+            _wait()
+    except BaseException:
+        # Nothing cached for a failed crawl is returned, so release it
+        # all (the writer pool has joined its last write by now).
+        for o in (*outputs, out, pending and pending[1]):
+            if o is not None:
+                o.unpersist()
+        raise
+    finally:
+        pages_prepared.unpersist()
+        if pages_fallback is not None:
+            pages_fallback.unpersist()
     return CrawlResult(
         state,
         fetched_per_round,

@@ -12,10 +12,20 @@ to re-crawl; this module makes the seen-state actually forget them.
 Snapshot semantics: eviction is written as a NEW checkpoint round
 (``round_no + 1``) via ``save_state(compact_every=1)`` — the forced
 compaction writes the survivor set as the new ``compacted/url_seen``
-base, so no in-place rewrite ever happens and a crash mid-evict leaves
-LATEST pointing at the intact pre-evict round (same commit discipline
-as the crawl loop).  This is the parquet emulation of an Iceberg
-``DELETE FROM url_seen WHERE ...`` + ``rewrite_data_files``.
+base, so no in-place rewrite ever happens.  ``save_state`` moves LATEST
+only after every file of the round has landed, so a crash mid-evict
+leaves LATEST pointing at the intact pre-evict round — the one commit
+point every crawl round goes through too.  This is the parquet
+emulation of an Iceberg ``DELETE FROM url_seen WHERE ...`` +
+``rewrite_data_files``.
+
+Duplicate cuckoo fingerprints after a crash: a crawl round updates the
+sidecar before its checkpoint commits, so a crash in between makes the
+resumed round insert the same keys again, and the shards keep two
+copies of each.  Evicting such a key removes one copy and leaves a
+stale positive.  Every positive is verified exactly against url_seen,
+so this costs time, never results (tests/test_checkpoint_resume.py
+evicts after a crash and compares with a crawl that never crashed).
 
 Sidecar cost asymmetry (when to pick cuckoo over bloom):
   - cuckoo: ``delete_cuckoo_shards`` removes one stored fingerprint

@@ -29,9 +29,10 @@ after (asserted in tests/test_expire.py).
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
+
+from pyppeteer_scraper_spark.plans.checkpoint import read_manifest
 
 STATE_DELTA_TABLES = ("url_seen", "workshops", "metrics")
 
@@ -55,15 +56,13 @@ def expire_snapshots(ckpt_dir: str, keep_last: int = 2) -> dict:
     edge-graph sidecar (``edges/round=K``, written by track_edges) is
     cumulative history, not a superseded snapshot, and is never touched.
     """
-    with open(os.path.join(ckpt_dir, "LATEST")) as f:
-        latest = int(f.read().strip())
+    latest = read_manifest(ckpt_dir)["round_no"]
     kept_rounds = [r for r in range(latest - keep_last + 1, latest + 1) if r >= 0]
-    manifests = {}
-    for r in kept_rounds:
-        p = os.path.join(ckpt_dir, f"round={r}", "manifest.json")
-        if os.path.isfile(p):
-            with open(p) as f:
-                manifests[r] = json.load(f)
+    manifests = {
+        r: read_manifest(ckpt_dir, r)
+        for r in kept_rounds
+        if os.path.isfile(os.path.join(ckpt_dir, f"round={r}", "manifest.json"))
+    }
     deleted: list[str] = []
 
     def rm(path: str) -> None:

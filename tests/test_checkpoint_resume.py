@@ -1,7 +1,13 @@
 """Resume-from-checkpoint exactness + parallelism invariance
-(SURVEY.md §5 items 4-5), plus delta→base compaction (bounded per-load
-file reads at unbounded round counts)."""
+(SURVEY.md §5 items 4-5), delta→base compaction (bounded per-load
+file reads at unbounded round counts), and resume after a write that
+fails part-way through a round's checkpoint."""
 
+import os
+import shutil
+
+import pytest
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from pyppeteer_scraper_spark.plans.checkpoint import (
@@ -11,6 +17,19 @@ from pyppeteer_scraper_spark.plans.checkpoint import (
     load_state,
 )
 from pyppeteer_scraper_spark.sources.datagen import generate_crawl_tables
+
+
+@pytest.fixture(scope="module", autouse=True)
+def short_plan_text(spark):
+    """Cap the physical-plan text the SQL UI store keeps per query.  A
+    crawl round with every option on leaves ~140 MB of it (its largest
+    plan prints as 41 MB), so this module's crawls would fill a 4 GB
+    driver heap; no result depends on that text."""
+    key = "spark.sql.maxPlanStringLength"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "256k")
+    yield
+    spark.conf.set(key, prev)
 
 
 def _state_snapshot(state):
@@ -196,7 +215,8 @@ def test_compaction_bounds_load_file_count(spark, tmp_path):
             n_partitions=2,
             compact_every=k,
         )
-        # state reload per round, as crawl() does (flat lineage)
+        # carry the reloaded table forward (flat lineage; exercises
+        # load_state at every round)
         seen = load_state(spark, ckpt, rnd).url_seen
 
     import json
@@ -298,3 +318,145 @@ def test_track_edges_and_reprioritize(spark, sf_small, tmp_path):
         # with 0/1 priorities and a 30% promote band, some pending
         # priority-1 URL with in-links must move to the front
         assert promoted, f"{method}: no URL promoted"
+
+
+# Every stateful option on: bucketed frontier, a compaction at round 2,
+# edge deltas and a cuckoo seen-filter sidecar.
+FAULT_KW = dict(
+    incremental_frontier=True, n_buckets=8, compact_every=2, track_edges=True,
+    use_bloom=True, seen_filter="cuckoo",
+)
+
+
+@pytest.fixture(scope="module")
+def crawl_tables(spark, sf_small):
+    return generate_crawl_tables(spark, sf_small)
+
+
+@pytest.fixture(scope="module")
+def reference_ckpt(spark, crawl_tables, tmp_path_factory):
+    """Checkpoint dir of the never-crashed 3-round crawl."""
+    t = crawl_tables
+    ckpt = str(tmp_path_factory.mktemp("reference"))
+    crawl(spark, t["pages"], t["seeds"], t["robots"], 3, ckpt, **FAULT_KW)
+    return ckpt
+
+
+def _committed(spark, ckpt):
+    """What a resume must reproduce: the LATEST state, every round's
+    metrics and the union of every round's edge delta.
+
+    Metrics are compared as per-round totals: ``partition_id`` is the
+    Spark task partition, and a resumed round reads its state from
+    parquet instead of pinned frames, so adaptive execution can split
+    the same rows over partitions differently (this holds for any
+    resume, crash or not)."""
+    from pyppeteer_scraper_spark.operators.linkrank import load_edges
+
+    metrics = load_metrics(spark, ckpt).groupBy("round").agg(
+        F.sum("fetched").alias("fetched"),
+        F.sum("deduped").alias("deduped"),
+        F.sum("emitted").alias("emitted"),
+    )
+    edges = load_edges(spark, ckpt).select("round", "src_hash", "dst_hash")
+    return (
+        _state_snapshot(load_state(spark, ckpt)),
+        sorted(tuple(r) for r in metrics.collect()),
+        sorted(tuple(r) for r in edges.collect()),
+    )
+
+
+def _crash_at(spark, t, ckpt, table, async_checkpoint, monkeypatch):
+    """Run 3 rounds whose round-2 write to ``table`` raises, then check
+    that nothing of round 2 was committed and that the failed crawl
+    left no cached data behind."""
+    failing = os.path.join(ckpt, table, "round=2")
+    parquet = DataFrameWriter.parquet
+
+    def failing_parquet(self, path, *args, **kwargs):
+        # matched on the path: the round's writes run concurrently
+        if path == failing:
+            raise OSError(f"injected write failure: {path}")
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    spark.catalog.clearCache()
+    with pytest.raises(OSError, match="injected write failure"):
+        crawl(
+            spark, t["pages"], t["seeds"], t["robots"], 3, ckpt,
+            async_checkpoint=async_checkpoint, **FAULT_KW,
+        )
+    monkeypatch.undo()
+    with open(os.path.join(ckpt, "LATEST")) as f:
+        assert f.read() == "1"
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize(
+    "table,async_checkpoint",
+    [
+        ("frontier_buckets", False),
+        ("url_seen", True),
+        ("compacted/url_seen", False),
+        ("edges", True),
+        ("metrics", False),
+    ],
+)
+def test_resume_after_failed_write_equals_uncrashed(
+    spark, crawl_tables, reference_ckpt, tmp_path, monkeypatch, table,
+    async_checkpoint,
+):
+    """A write that fails anywhere in round 2's checkpoint leaves LATEST
+    at round 1, and the resumed crawl commits exactly the state, metrics
+    and edges of a crawl that never crashed."""
+    t = crawl_tables
+    ckpt = str(tmp_path / "ckpt")
+    _crash_at(spark, t, ckpt, table, async_checkpoint, monkeypatch)
+    crawl(
+        spark, t["pages"], t["seeds"], t["robots"], 2, ckpt, resume=True,
+        async_checkpoint=async_checkpoint, **FAULT_KW,
+    )
+    assert _committed(spark, ckpt) == _committed(spark, reference_ckpt)
+
+
+def test_cuckoo_reinsert_after_crash_only_costs_time(
+    spark, crawl_tables, reference_ckpt, tmp_path, monkeypatch
+):
+    """The crashed round updated the cuckoo sidecar before its commit
+    failed, so the resumed round inserts the same keys again and the
+    shards hold two fingerprints per key.  Evicting such a key removes
+    one copy and leaves a stale positive; the exact verify behind every
+    positive keeps the next round equal to the never-crashed crawl's."""
+    from pyppeteer_scraper_spark.operators.cuckoo import cuckoo_annotate
+    from pyppeteer_scraper_spark.plans.evict import evict_urls
+
+    t = crawl_tables
+    crashed = str(tmp_path / "crashed")
+    _crash_at(spark, t, crashed, "metrics", False, monkeypatch)
+    crawl(
+        spark, t["pages"], t["seeds"], t["robots"], 2, crashed, resume=True,
+        **FAULT_KW,
+    )
+    uncrashed = str(tmp_path / "uncrashed")
+    shutil.copytree(reference_ckpt, uncrashed)
+
+    victims = spark.createDataFrame(
+        load_state(spark, uncrashed)
+        .url_seen.filter(F.col("first_seen_round") == 2)
+        .orderBy("url")
+        .select("url_hash", "url")
+        .limit(2)
+        .collect()
+    )
+    assert victims.count() == 2
+    for ckpt in (crashed, uncrashed):
+        evict_urls(spark, ckpt, victims, seen_filter="cuckoo")
+    stale = cuckoo_annotate(victims, os.path.join(crashed, "cuckoo")).collect()
+    assert all(r["maybe_seen"] for r in stale)
+
+    for ckpt in (crashed, uncrashed):
+        crawl(
+            spark, t["pages"], t["seeds"], t["robots"], 1, ckpt, resume=True,
+            **FAULT_KW,
+        )
+    assert _committed(spark, crashed) == _committed(spark, uncrashed)

@@ -72,7 +72,7 @@ def main() -> None:
     n_rounds = int(sys.argv[1]) if len(sys.argv) > 1 else 100
     k = int(sys.argv[2]) if len(sys.argv) > 2 else 16
 
-    from pyppeteer_scraper_spark.plans.checkpoint import _delta_dirs
+    from pyppeteer_scraper_spark.plans.checkpoint import _delta_dirs, read_manifest
     from pyppeteer_scraper_spark.session import get_spark
 
     spark = get_spark("compaction-bench", cores=8, shuffle_partitions=4)
@@ -81,10 +81,7 @@ def main() -> None:
         ckpt = tempfile.mkdtemp(prefix=f"cmp_{label}_")
         t0 = time.time()
         load_times = synth_crawl(spark, ckpt, n_rounds, ce)
-        import json as _json
-
-        with open(os.path.join(ckpt, f"round={n_rounds}", "manifest.json")) as f:
-            compacted = _json.load(f).get("compacted", {})
+        compacted = read_manifest(ckpt, n_rounds).get("compacted", {})
         dirs = _delta_dirs(
             ckpt, "url_seen", n_rounds, compacted.get("url_seen", 0)
         )
