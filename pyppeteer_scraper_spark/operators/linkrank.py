@@ -194,8 +194,15 @@ def load_edges(spark: SparkSession, ckpt_dir: str) -> DataFrame:
     rediscovered in a later round repeats across partitions; callers
     that need set semantics (``pagerank`` does — duplicate edges would
     double that link's contribution weight) apply ``.distinct()``.
+
+    Only committed rounds are read (``round`` ≤ the one ``LATEST`` points
+    at): a round whose checkpoint failed part-way may have left its
+    edges delta on disk, and a resume rewrites it.
     """
-    return spark.read.parquet(os.path.join(ckpt_dir, "edges"))
+    from pyppeteer_scraper_spark.plans.checkpoint import latest_round
+
+    edges = spark.read.parquet(os.path.join(ckpt_dir, "edges"))
+    return edges.filter(F.col("round") <= latest_round(ckpt_dir))
 
 
 def reprioritize_frontier(

@@ -14,6 +14,7 @@ layout below mirrors that.
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import time
@@ -85,14 +86,25 @@ def _pin(dfs: list[DataFrame]) -> list[DataFrame]:
     return out
 
 
+def latest_round(ckpt_dir: str) -> int:
+    """The last committed round: the one ``LATEST`` points at."""
+    with open(os.path.join(ckpt_dir, "LATEST")) as f:
+        return int(f.read().strip())
+
+
 def read_manifest(ckpt_dir: str, round_no: int | None = None) -> dict:
-    """Manifest of round ``round_no`` — by default of the last committed
-    round, the one ``LATEST`` points at."""
+    """Manifest of round ``round_no`` (``latest_round`` by default).
+    Raises ``FileNotFoundError`` if that round has no manifest, and
+    ``ValueError`` if the manifest records another round (a misplaced or
+    copied round directory)."""
     if round_no is None:
-        with open(os.path.join(ckpt_dir, "LATEST")) as f:
-            round_no = int(f.read().strip())
-    with open(os.path.join(ckpt_dir, f"round={round_no}", "manifest.json")) as f:
-        return json.load(f)
+        round_no = latest_round(ckpt_dir)
+    path = os.path.join(ckpt_dir, f"round={round_no}", "manifest.json")
+    with open(path) as f:
+        manifest = json.load(f)
+    if manifest["round_no"] != round_no:
+        raise ValueError(f"{path} is the manifest of round {manifest['round_no']}")
+    return manifest
 
 
 def save_state(
@@ -521,6 +533,13 @@ def crawl(
 
         with ThreadPoolExecutor(max_workers=1) as writer_pool:
             while state.round_no < target:
+                # py4j handles sit in reference cycles (a JavaObject
+                # caches its JavaMembers, which point back at it), so JVM
+                # objects that earlier rounds dropped (query plans and
+                # what they reference) stay live in the driver heap until
+                # Python's cyclic GC runs, which in a large process can
+                # be many crawls later.
+                gc.collect()
                 if rounds_done and rounds_done % HINT_REFRESH_ROUNDS == 0:
                     n_domains_hint = max(
                         n_domains_hint,

@@ -32,7 +32,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyppeteer_scraper_spark.plans.checkpoint import read_manifest
+from pyppeteer_scraper_spark.plans.checkpoint import latest_round, read_manifest
 
 STATE_DELTA_TABLES = ("url_seen", "workshops", "metrics")
 
@@ -56,13 +56,14 @@ def expire_snapshots(ckpt_dir: str, keep_last: int = 2) -> dict:
     edge-graph sidecar (``edges/round=K``, written by track_edges) is
     cumulative history, not a superseded snapshot, and is never touched.
     """
-    latest = read_manifest(ckpt_dir)["round_no"]
+    latest = latest_round(ckpt_dir)
     kept_rounds = [r for r in range(latest - keep_last + 1, latest + 1) if r >= 0]
-    manifests = {
-        r: read_manifest(ckpt_dir, r)
-        for r in kept_rounds
-        if os.path.isfile(os.path.join(ckpt_dir, f"round={r}", "manifest.json"))
-    }
+    manifests = {}
+    for r in kept_rounds:
+        try:
+            manifests[r] = read_manifest(ckpt_dir, r)
+        except FileNotFoundError:
+            pass
     deleted: list[str] = []
 
     def rm(path: str) -> None:

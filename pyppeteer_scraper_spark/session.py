@@ -71,6 +71,15 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/tmp"),
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Bound the plan text Spark builds for every query and keeps per
+        # SQL execution in the driver's status store (UI on or off).
+        # The iterative plans of a crawl with every option on print to
+        # tens of MB each, and uncapped a 3-round crawl left ~400 MB of
+        # them in the driver heap.  2m keeps a one-round polite crawl's
+        # analyzed plan (~1.4M chars) whole; only explain/plan strings
+        # are truncated, and no result depends on them.
+        .config("spark.sql.maxPlanStringLength", "2m")
+        .config("spark.sql.ui.retainedExecutions", "100")
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -10,26 +10,15 @@ import pytest
 from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
+from pyppeteer_scraper_spark.operators.linkrank import load_edges
 from pyppeteer_scraper_spark.plans.checkpoint import (
     _delta_dirs,
     crawl,
     load_metrics,
     load_state,
+    read_manifest,
 )
 from pyppeteer_scraper_spark.sources.datagen import generate_crawl_tables
-
-
-@pytest.fixture(scope="module", autouse=True)
-def short_plan_text(spark):
-    """Cap the physical-plan text the SQL UI store keeps per query.  A
-    crawl round with every option on leaves ~140 MB of it (its largest
-    plan prints as 41 MB), so this module's crawls would fill a 4 GB
-    driver heap; no result depends on that text."""
-    key = "spark.sql.maxPlanStringLength"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "256k")
-    yield
-    spark.conf.set(key, prev)
 
 
 def _state_snapshot(state):
@@ -351,8 +340,6 @@ def _committed(spark, ckpt):
     parquet instead of pinned frames, so adaptive execution can split
     the same rows over partitions differently (this holds for any
     resume, crash or not)."""
-    from pyppeteer_scraper_spark.operators.linkrank import load_edges
-
     metrics = load_metrics(spark, ckpt).groupBy("round").agg(
         F.sum("fetched").alias("fetched"),
         F.sum("deduped").alias("deduped"),
@@ -390,6 +377,8 @@ def _crash_at(spark, t, ckpt, table, async_checkpoint, monkeypatch):
     with open(os.path.join(ckpt, "LATEST")) as f:
         assert f.read() == "1"
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    # an edges delta that landed before the failure is not read
+    assert load_edges(spark, ckpt).filter(F.col("round") > 1).count() == 0
 
 
 @pytest.mark.parametrize(
@@ -460,3 +449,14 @@ def test_cuckoo_reinsert_after_crash_only_costs_time(
             **FAULT_KW,
         )
     assert _committed(spark, crashed) == _committed(spark, uncrashed)
+
+
+def test_read_manifest_rejects_a_moved_round(tmp_path):
+    """A round directory copied or moved to another round number must
+    not load as that round."""
+    rdir = tmp_path / "round=3"
+    rdir.mkdir()
+    (rdir / "manifest.json").write_text('{"round_no": 2}')
+    (tmp_path / "LATEST").write_text("3")
+    with pytest.raises(ValueError, match="manifest of round 2"):
+        read_manifest(str(tmp_path))
