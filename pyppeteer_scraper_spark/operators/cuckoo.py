@@ -2,19 +2,22 @@
 (north_rule: "URL-seen dedup via a sharded bloom/cuckoo filter
 maintained per partition"; ``crawl(use_seen_filter=True)``).
 
-Role at scale: the exact left-anti join against ``url_seen`` shuffles
-candidate URLs against a 10^10-row table every round.  Shard =
-pmod(url_hash, n_shards); shards persist through a pluggable
-``ShardStore``, and probes answer "definitely unseen" locally, so only
-positives pay the exact anti-join.  Why a cuckoo filter (Fan et al.,
-"Cuckoo Filter: Practically Better Than Bloom", CoNEXT 2014):
-
-- **Deletion.**  ``delete_cuckoo_shards`` removes a batch of keys in
-  O(batch) — the recrawl/TTL-eviction path (``plans/evict.py``).  A
-  bloom filter cannot delete; evicting a URL cohort under bloom means
-  rebuilding the whole sidecar from url_seen (one full-table pass).
-- Low FP for its size: two 4-slot buckets of 16-bit fingerprints give
-  FP ≈ 2·b/2^f ≈ 0.012% vs ~1.2% for a 10-bit/key bloom filter.
+Role at scale: the sidecar holds the ``url_hash`` keys of every
+frontier row — every URL the crawl has ever discovered, which is the
+URL-seen set (Mercator's URL-seen test).  The exact left-anti join of a
+round's links against those keys shuffles them against a table that
+reaches 10^10 rows.  Shard = pmod(url_hash, n_shards); shards persist
+through a pluggable ``ShardStore``, and probes answer "definitely
+unseen" locally, so only positives pay the exact anti-join.  The crawl
+inserts each round's new frontier keys and never deletes one (an
+evicted URL stays a frontier row), so a filter that is current for the
+round it serves has no false negatives.  ``crawl()`` checks that with a
+marker blob (``round.json``) recording the round the keys cover, and
+rebuilds the sidecar from the full frontier when it does not match.
+Why a cuckoo filter (Fan et al., "Cuckoo Filter: Practically Better
+Than Bloom", CoNEXT 2014): low FP for its size — two 4-slot buckets of
+16-bit fingerprints give FP ≈ 2·b/2^f ≈ 0.012% vs ~1.2% for a
+10-bit/key bloom filter.
 
 Storage: all shard/params I/O goes through ``ShardStore``
 (read/write/list/delete of named blobs).  The default maps the sidecar
@@ -30,13 +33,13 @@ fingerprint is mapped into [1, 65535]).  Key x with 64-bit ``url_hash``
 h gets fingerprint fp = h % 65535 + 1 and two candidate buckets
 i1 = h mod nb, i2 = i1 XOR (fp * K mod nb) — the XOR form makes each
 bucket computable from the other plus the resident fingerprint, which
-is what lets eviction walks and deletes run without the original key.
+is what lets eviction walks run without the original key.
 
 No-false-negative guarantee (required for crawl correctness — a false
 negative would re-crawl forever): duplicates ARE stored (each insert
-writes its own copy), deletes remove exactly one copy, and inserts
-that still fail after ``max_kicks`` evictions land in a small per-shard
-overflow stash checked by every probe.  The stash only grows past the
+writes its own copy), and inserts that still fail after ``max_kicks``
+evictions land in a small per-shard overflow stash checked by every
+probe.  The stash only grows past the
 load-factor capacity the sizing targets (0.66; cuckoo filters fill to
 ~0.95 before thrashing), and ``ensure_cuckoo_sidecar`` rebuilds at a
 bigger size on param change.
@@ -45,12 +48,12 @@ Vectorization: batch inserts place items slot-pass by slot-pass (one
 numpy scatter per (bucket-choice, slot) — 8 vector ops per sweep);
 only the rare items still homeless after the vector sweeps walk the
 sequential eviction loop (same tail strategy as the rolling-hash
-fingerprint: vectorize the mass, loop the outliers).  Probes and
-deletes are pure numpy gathers over the batch.
+fingerprint: vectorize the mass, loop the outliers).  Probes are pure
+numpy gathers over the batch.
 
 Reference analog: the whole-file JSON seen-set re-read every run
 (/root/reference/service/alert.py:460-490) — same thing the bloom
-sidecar replaces, now with per-cohort forgetting.
+sidecar replaces.
 """
 
 from __future__ import annotations
@@ -220,7 +223,7 @@ def _insert_batch(
     table: np.ndarray, stash: np.ndarray, hashes: np.ndarray, params: CuckooParams
 ) -> np.ndarray:
     """Insert ``hashes`` into ``table``; returns the updated stash.
-    Duplicates are stored (delete removes one copy each)."""
+    Duplicates are stored."""
     nb = params.n_buckets
     fp = _fingerprints(hashes)
     b1 = _bucket1(hashes, nb)
@@ -271,8 +274,7 @@ def _insert_batch(
             # final displaced victim (the original key's fp was written
             # into the table on the first kick).  Park it in the stash
             # keyed by (fp, bucket); probes check the stash against both
-            # candidate buckets, so it stays findable, and deletes check
-            # the stash after the table, so copy accounting holds.
+            # candidate buckets, so it stays findable.
             new_stash.append(int(cur_fp) | (int(cur_b) << 16))
     if new_stash:
         stash = np.concatenate([stash, np.array(new_stash, dtype=np.uint64)])
@@ -303,122 +305,80 @@ def _contains(
     return hit | _stash_match(stash, fp, b1, b2)
 
 
-def _delete_batch(
-    table: np.ndarray, stash: np.ndarray, hashes: np.ndarray, params: CuckooParams
-) -> tuple[np.ndarray, int]:
-    """Remove ONE stored copy per key present; returns (stash, n_removed).
-    Buckets are processed in a per-bucket loop over the delete batch
-    only (deletes are the rare recrawl path; slot bookkeeping under
-    duplicate fingerprints needs sequential updates per bucket)."""
-    nb = params.n_buckets
-    fp = _fingerprints(hashes)
-    b1 = _bucket1(hashes, nb)
-    b2 = _alt_bucket(b1, fp, nb)
-    removed = 0
-    for i in range(len(hashes)):
-        done = False
-        for b in (int(b1[i]), int(b2[i])):
-            row = table[b]
-            slots = np.nonzero(row == fp[i])[0]
-            if len(slots):
-                table[b, slots[0]] = 0
-                removed += 1
-                done = True
-                break
-        if not done and len(stash):
-            key1 = np.uint64(int(fp[i]) | (int(b1[i]) << 16))
-            key2 = np.uint64(int(fp[i]) | (int(b2[i]) << 16))
-            pos = np.nonzero((stash == key1) | (stash == key2))[0]
-            if len(pos):
-                stash = np.delete(stash, pos[0])
-                removed += 1
-    return stash, removed
-
-
-def _apply_shard_op(
-    delta: DataFrame,
+def update_cuckoo_shards(
+    keys: DataFrame,
     cuckoo_dir: str,
-    params: CuckooParams,
-    store_factory,
-    op: str,
+    params: CuckooParams | None = None,
+    store_factory=None,
 ) -> int:
-    """Group the delta by shard; each task loads its shard, applies the
-    insert/delete batch, writes it back — O(delta) per call."""
-    n_shards = params.n_shards
+    """Insert the ``url_hash`` column of ``keys``: group it by shard;
+    each task loads its shard, inserts its batch and writes it back —
+    O(keys) per call.  Returns hashes inserted."""
+    params = resolve_params(cuckoo_dir, params, store_factory)
+    save_params(cuckoo_dir, params, store_factory)
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         store = _store(cuckoo_dir, store_factory)
         shard = int(pdf["shard"].iloc[0])
         table, stash = _load_shard(store, shard, params.n_buckets)
         hashes = pdf["url_hash"].to_numpy().astype(np.uint64)
-        if op == "insert":
-            stash = _insert_batch(table, stash, hashes, params)
-            n = len(hashes)
-        else:
-            stash, n = _delete_batch(table, stash, hashes, params)
+        stash = _insert_batch(table, stash, hashes, params)
         _save_shard(store, shard, table, stash)
-        return pd.DataFrame({"shard": [shard], "n": [n]})
+        return pd.DataFrame({"shard": [shard], "n": [len(hashes)]})
 
-    keyed = delta.select(
-        "url_hash", F.pmod(F.col("url_hash"), F.lit(n_shards)).alias("shard")
+    keyed = keys.select(
+        "url_hash", F.pmod(F.col("url_hash"), F.lit(params.n_shards)).alias("shard")
     )
     out = keyed.groupBy("shard").applyInPandas(run, "shard int, n long")
     return sum(r["n"] for r in out.collect())
 
 
-def update_cuckoo_shards(
-    url_seen_delta: DataFrame,
-    cuckoo_dir: str,
-    params: CuckooParams | None = None,
-    store_factory=None,
-) -> int:
-    """Insert this round's url_hash delta.  Returns hashes inserted."""
-    params = resolve_params(cuckoo_dir, params, store_factory)
-    save_params(cuckoo_dir, params, store_factory)
-    return _apply_shard_op(
-        url_seen_delta.select("url_hash"), cuckoo_dir, params, store_factory,
-        "insert",
+def save_round(cuckoo_dir: str, round_no: int, store_factory=None) -> None:
+    """Record that the shards hold the keys as of round ``round_no``."""
+    _store(cuckoo_dir, store_factory).write(
+        "round.json", json.dumps({"round_no": round_no}).encode()
     )
 
 
-def delete_cuckoo_shards(
-    url_delta: DataFrame,
-    cuckoo_dir: str,
-    params: CuckooParams | None = None,
-    store_factory=None,
-) -> int:
-    """Remove one stored copy per key — the recrawl/TTL eviction path
-    bloom cannot express.  Returns copies removed."""
-    params = resolve_params(cuckoo_dir, params, store_factory)
-    return _apply_shard_op(
-        url_delta.select("url_hash"), cuckoo_dir, params, store_factory,
-        "delete",
-    )
+def load_round(cuckoo_dir: str, store_factory=None) -> int | None:
+    raw = _store(cuckoo_dir, store_factory).read("round.json")
+    return None if raw is None else json.loads(raw)["round_no"]
 
 
 def ensure_cuckoo_sidecar(
-    url_seen: DataFrame,
+    keys: DataFrame,
     cuckoo_dir: str,
+    round_no: int,
     params: CuckooParams | None = None,
     store_factory=None,
+    rebuild: bool = False,
 ) -> CuckooParams:
-    """(Re)build from the FULL url_seen when the dir is new or params
-    changed.  Without this, enabling the sidecar on a resumed crawl (or
-    resizing it) would insert only future deltas, and previously seen
-    URLs would pass the "definitely unseen" fast path.  ``params=None``
-    keeps the stored params, or ``CuckooParams()`` for a new dir."""
+    """Make the sidecar hold exactly the ``url_hash`` keys of ``keys``,
+    the full key set as of round ``round_no``.  It is kept only when its
+    params match and its marker (``save_round``) names ``round_no``;
+    otherwise — or with ``rebuild=True`` — every blob is dropped and the
+    shards are rebuilt from ``keys``.  A sidecar that missed some rounds'
+    inserts would answer "definitely unseen" for their keys and let them
+    past the exact anti-join.  The marker goes first on a rebuild and
+    last after it, so a rebuild that fails part-way is redone.
+    ``params=None`` keeps the stored params, or ``CuckooParams()`` for a
+    new dir."""
     store = _store(cuckoo_dir, store_factory)
     stored = load_params(cuckoo_dir, store_factory)
     want = params or stored or CuckooParams()
-    if stored == want:
+    if (
+        not rebuild
+        and stored == want
+        and load_round(cuckoo_dir, store_factory) == round_no
+    ):
         return want
+    store.delete("round.json")
     for name in store.list():
         if name.startswith("cuckoo=") or name == "params.json":
             store.delete(name)
     save_params(cuckoo_dir, want, store_factory)
-    update_cuckoo_shards(
-        url_seen.select("url_hash"), cuckoo_dir, want, store_factory
-    )
+    update_cuckoo_shards(keys, cuckoo_dir, want, store_factory)
+    save_round(cuckoo_dir, round_no, store_factory)
     return want
 
 
@@ -459,15 +419,16 @@ def cuckoo_annotate(
 
 def anti_join_with_cuckoo(
     candidates: DataFrame,
-    url_seen: DataFrame,
+    seen: DataFrame,
     cuckoo_dir: str,
     params: CuckooParams | None = None,
     caches: list | None = None,
     store_factory=None,
 ) -> DataFrame:
-    """candidates ∖ url_seen — byte-identical to the plain left-anti
-    join (cuckoo-negatives pass straight through; positives are
-    verified exactly).  ``annotated`` is cached because both branches
+    """candidates ∖ seen on ``(url_hash, url)`` — byte-identical to the
+    plain left-anti join when the sidecar holds every key of ``seen``
+    (cuckoo-negatives pass straight through; positives are verified
+    exactly).  ``annotated`` is cached because both branches
     filter it; the handle goes to ``caches`` for the caller's round-level
     unpersist sweep."""
     annotated = cuckoo_annotate(
@@ -478,7 +439,7 @@ def anti_join_with_cuckoo(
     fresh = annotated.filter(~F.col("maybe_seen")).drop("maybe_seen")
     suspect = annotated.filter(F.col("maybe_seen")).drop("maybe_seen")
     verified = suspect.join(
-        url_seen.select("url_hash", "url"), ["url_hash", "url"], "left_anti"
+        seen.select("url_hash", "url"), ["url_hash", "url"], "left_anti"
     )
     return fresh.unionByName(verified)
 

@@ -33,7 +33,7 @@ from pyppeteer_scraper_spark.plans.round import (
     prepare_pages,
     run_round,
 )
-from pyppeteer_scraper_spark.schemas import URL_SEEN_SCHEMA
+from pyppeteer_scraper_spark.schemas import METRICS_SCHEMA, URL_SEEN_SCHEMA
 
 STATE_TABLES = ["frontier", "url_seen", "workshops"]
 
@@ -243,10 +243,7 @@ def save_state(
         compacted["workshops"] = rn
         # This round's metrics delta is being written in the same window,
         # so the metrics base covers ≤ r-1, read back from disk.
-        mdirs = _delta_dirs(
-            ckpt_dir, "metrics", rn - 1, compacted.get("metrics", 0),
-            compacted_table="metrics",
-        )
+        mdirs = _delta_dirs(ckpt_dir, "metrics", rn - 1, compacted.get("metrics", 0))
         if mdirs:
             write(
                 spark.read.parquet(*mdirs).coalesce(max(1, n_partitions // 8)),
@@ -272,11 +269,7 @@ def save_state(
 
 
 def _delta_dirs(
-    ckpt_dir: str,
-    table: str,
-    round_no: int,
-    compacted_round: int = 0,
-    compacted_table: str | None = None,
+    ckpt_dir: str, table: str, round_no: int, compacted_round: int = 0
 ) -> list[str]:
     """Directories a load of ``table`` at ``round_no`` must read: the
     compacted base (if any) + deltas strictly after it — ≤ 1 +
@@ -284,12 +277,7 @@ def _delta_dirs(
     dirs = []
     if compacted_round:
         dirs.append(
-            os.path.join(
-                ckpt_dir,
-                "compacted",
-                compacted_table or table,
-                f"round={compacted_round}",
-            )
+            os.path.join(ckpt_dir, "compacted", table, f"round={compacted_round}")
         )
     base = os.path.join(ckpt_dir, table)
     if os.path.isdir(base):
@@ -343,15 +331,18 @@ def load_metrics(spark: SparkSession, ckpt_dir: str, round_no: int | None = None
     (LATEST by default) — compacted base + deltas, same bounded-read
     scheme as the state tables.
 
+    ``partition_id`` is a URL partition, not a Spark task:
+    ``pmod(url_hash, spark.sql.shuffle.partitions)`` of the fetched URL,
+    the new link or the action row's URL, so a resumed round writes the
+    same rows as one that never stopped (at the same partition setting).
+
     ``duration_ms`` is the same for every row of a round: the span from
     the round's ``run_round`` call until its new state is pinned and the
     seen-filter sidecar (if any) updated — the round's own critical
     path, excluding its checkpoint writes."""
     manifest = read_manifest(ckpt_dir, round_no)
     return _load_deltas(
-        spark, ckpt_dir, "metrics",
-        "round int, partition_id int, fetched long, deduped long, "
-        "emitted long, duration_ms long",
+        spark, ckpt_dir, "metrics", METRICS_SCHEMA,
         manifest["round_no"], manifest.get("compacted", {}).get("metrics", 0),
     )
 
@@ -411,14 +402,19 @@ def crawl(
 
     ``resume=True`` continues from the LATEST checkpoint in ckpt_dir —
     the reference's restart-from-state-files behavior, but exact.
-    ``use_seen_filter=True`` maintains a sharded cuckoo-filter sidecar
-    under ``<ckpt_dir>/cuckoo`` (operators/cuckoo.py) and routes the
-    url_seen anti-join through it (identical results, cheaper at scale;
-    ``plans/evict.py`` deletes from it in O(batch)).  The sidecar keeps
-    its stored params, or ``CuckooParams()`` when first built, and is
-    rebuilt from the full url_seen when enabled on a resumed crawl.
-    ``store_factory`` points shard I/O at shared storage on a cluster
-    (the ``cuckoo.ShardStore`` seam — local FS by default).
+    ``use_seen_filter=True`` keeps a sharded cuckoo-filter sidecar of the
+    frontier's URL keys under ``<ckpt_dir>/cuckoo`` (operators/cuckoo.py):
+    links it calls definitely unseen skip the exact anti-join against the
+    frontier (identical results).  Each round inserts its new
+    links' keys and then records its round in the sidecar's marker.  The
+    crawl trusts the sidecar only when that marker equals the round it
+    starts from; otherwise (a fresh crawl, a sidecar the crawl did not
+    keep current: rounds run without the filter, an ``evict_urls``
+    round, a crash after the insert) it rebuilds it from the full
+    frontier.  The sidecar keeps its stored params, or ``CuckooParams()``
+    when first built.  ``store_factory`` points shard I/O at shared
+    storage on a cluster (the ``cuckoo.ShardStore`` seam — local FS by
+    default).
     ``global_budget`` caps each round's TOTAL fetch batch (fetcher
     fleet capacity) on top of the per-domain politeness caps, shared
     max-min fairly across domains via water-filling
@@ -512,10 +508,13 @@ def crawl(
             os.path.join(ckpt_dir, SEEN_FILTER_DIR) if use_seen_filter else None
         )
         if use_seen_filter:
-            # Build from the FULL url_seen on first enable — delta-only
-            # inserts would miss crawl history.
+            # A sidecar that missed any key of this frontier would let
+            # known URLs past the exact anti-join, so anything but the
+            # marker of this very round (a fresh crawl may find another
+            # crawl's sidecar) means a rebuild from the full frontier.
             cuckoo.ensure_cuckoo_sidecar(
-                state.url_seen, seen_filter_dir, store_factory=store_factory
+                state.frontier.select("url_hash"), seen_filter_dir,
+                state.round_no, store_factory=store_factory, rebuild=not resume,
             )
         rounds_done = 0
         # One-time full pin of the resumed/initial append-only tables;
@@ -562,16 +561,20 @@ def crawl(
                 state = CrawlState(frontier_pin, mem_seen, mem_workshops, state.round_no)
                 if use_seen_filter:
                     # The next round's anti-join READS the sidecar: a
-                    # filter missing this round's keys would answer
-                    # "definitely unseen" and bypass the exact verify, so
-                    # the update stays on the critical path (O(this
-                    # round's new keys)).  Sidecar-before-commit is
-                    # crash-safe: a torn round can only add extra
-                    # positives, which are exact-verified.
+                    # filter missing this round's new frontier keys would
+                    # answer "definitely unseen" and bypass the exact
+                    # verify, so the insert stays on the critical path
+                    # (O(this round's new links)).  The marker moves only
+                    # after the insert.  A crash between the two only
+                    # adds positives, which are verified exactly; a
+                    # crash after the marker but before the commit
+                    # leaves it ahead of LATEST, and the resume rebuilds.
                     cuckoo.update_cuckoo_shards(
-                        seen_delta.select("url_hash"),
-                        seen_filter_dir,
+                        out.new_links, seen_filter_dir,
                         store_factory=store_factory,
+                    )
+                    cuckoo.save_round(
+                        seen_filter_dir, state.round_no, store_factory
                     )
                 duration_ms = int((time.time() - t_round) * 1000)
                 # The previous round's commit must land before this

@@ -1,6 +1,5 @@
-"""TTL / recrawl eviction — remove URLs from the url_seen set (and the
-cuckoo seen-filter sidecar, in O(batch)) and reset their frontier rows
-to ``pending`` so a resumed crawl re-fetches them.
+"""TTL / recrawl eviction — remove URLs from the url_seen set and reset
+their frontier rows to ``pending`` so a resumed crawl re-fetches them.
 
 Reference analog: the reference has no eviction at all — its JSON seen
 set only grows (/root/reference/service/alert.py:460-490), so a page
@@ -19,46 +18,31 @@ point every crawl round goes through too.  This is the parquet
 emulation of an Iceberg ``DELETE FROM url_seen WHERE ...`` +
 ``rewrite_data_files``.
 
-Duplicate cuckoo fingerprints after a crash: a crawl round updates the
-sidecar before its checkpoint commits, so a crash in between makes the
-resumed round insert the same keys again, and the shards keep two
-copies of each.  Evicting such a key removes one copy and leaves a
-stale positive.  Every positive is verified exactly against url_seen,
-so this costs time, never results (tests/test_checkpoint_resume.py
-evicts after a crash and compares with a crawl that never crashed).
+The cuckoo seen-filter sidecar is left alone: it holds the frontier's
+URL keys, and an evicted URL stays a frontier row (reset, not removed),
+so deleting its key would make the filter call a known URL "definitely
+unseen".  The eviction round moves LATEST past the round the sidecar's
+marker records, so the next ``crawl(use_seen_filter=True)`` rebuilds it
+from the full frontier — one pass over the frontier, the same order of
+work as the forced url_seen compaction.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyppeteer_scraper_spark.operators import cuckoo
-from pyppeteer_scraper_spark.plans.checkpoint import (
-    SEEN_FILTER_DIR,
-    load_state,
-    save_state,
-)
+from pyppeteer_scraper_spark.plans.checkpoint import load_state, save_state
 from pyppeteer_scraper_spark.plans.round import CrawlState
 
 
-def evict_urls(
-    spark: SparkSession,
-    ckpt_dir: str,
-    urls: DataFrame,
-    store_factory=None,
-) -> dict:
+def evict_urls(spark: SparkSession, ckpt_dir: str, urls: DataFrame) -> dict:
     """Evict ``urls`` (columns ``url_hash``, ``url``) from the LATEST
-    checkpoint: drop them from url_seen, reset their frontier rows to
+    checkpoint: drop them from url_seen and reset their frontier rows to
     ``pending`` (``last_fetch_round=-1, fetch_attempt=0``) so the next
-    crawl rounds re-schedule and re-fetch them, and remove them from
-    the cuckoo seen-filter sidecar if one exists under ``ckpt_dir``
-    (one stored fingerprint copy per key — O(batch), no rebuild).
+    crawl rounds re-schedule and re-fetch them.
 
-    Returns ``{"round_no", "evicted", "sidecar"}`` where ``sidecar`` is
-    ``"cuckoo-deleted"`` or ``"none"``.
+    Returns ``{"round_no", "evicted"}``.
     """
     state = load_state(spark, ckpt_dir)
     assert state.round_no > 0, "evict_urls needs at least one crawled round"
@@ -97,17 +81,5 @@ def evict_urls(
     # url_seen delta for this synthetic round is empty by construction:
     # no row has first_seen_round == round_no + 1.)
     save_state(new_state, ckpt_dir, compact_every=1)
-
-    sidecar = "none"
-    seen_filter_dir = os.path.join(ckpt_dir, SEEN_FILTER_DIR)
-    if cuckoo.load_params(seen_filter_dir, store_factory) is not None:
-        cuckoo.delete_cuckoo_shards(
-            ev.select("url_hash"), seen_filter_dir, store_factory=store_factory
-        )
-        sidecar = "cuckoo-deleted"
     ev.unpersist()
-    return {
-        "round_no": new_state.round_no,
-        "evicted": n_evict,
-        "sidecar": sidecar,
-    }
+    return {"round_no": new_state.round_no, "evicted": n_evict}

@@ -6,8 +6,9 @@ Reference lifecycle being re-expressed (SURVEY.md §3.1, tracing
     frontier scan → robots gate (broadcast join) → politeness top-k per
     domain (skew-safe two-phase window) → "fetch" = join against the
     pages table → mapInPandas extraction (title/text/links/payload) →
-    workshop filter+dedup+register rules → anti-join url_seen → union
-    new links into frontier → state + metrics append.
+    workshop filter+dedup+register rules → anti-join the frontier's URL
+    keys (the URL-seen set) → union new links into frontier → state +
+    metrics append.
 
 Everything except the single extraction UDF is JVM-side and
 Catalyst-optimized.  Determinism: no wall clock anywhere — the round
@@ -29,10 +30,10 @@ from pyppeteer_scraper_spark.operators import cuckoo
 from pyppeteer_scraper_spark.operators.budget import apply_global_budget
 from pyppeteer_scraper_spark.plans.extract import extract_pages
 from pyppeteer_scraper_spark.schemas import (
+    BASE_EPOCH,
     URL_SEEN_SCHEMA,
     WORKSHOP_PAYLOAD_SCHEMA,
 )
-from pyppeteer_scraper_spark.sources.datagen import BASE_EPOCH
 
 # Shared pool for RoundOutputs.materialize()'s two concurrent count
 # jobs — hoisted so a long crawl reuses one pool instead of building
@@ -80,16 +81,16 @@ class RoundOutputs:
     extracted: DataFrame
     actions: DataFrame
     metrics: DataFrame
-    new_links: DataFrame | None = None
-    errors: DataFrame | None = None  # one row per fetch/parse failure
-    touched_domains: DataFrame | None = None  # domains whose frontier rows changed
-    edges: DataFrame | None = None  # (src_hash, dst_hash) link-graph delta
+    new_links: DataFrame  # links new to the frontier: its rows added this round
+    errors: DataFrame  # one row per fetch/parse failure
+    touched_domains: DataFrame  # domains whose frontier rows changed
     # Round 5 (VERDICT r04 #7): the round's append-only state deltas,
     # exposed directly so the async-checkpoint pin can persist them
     # WITHOUT re-filtering the ever-growing url_seen/workshops unions —
     # per-round pin cost stays O(delta), not O(state).
-    seen_delta: DataFrame | None = None
-    workshops_delta: DataFrame | None = None
+    seen_delta: DataFrame
+    workshops_delta: DataFrame
+    edges: DataFrame | None = None  # (src_hash, dst_hash) link-graph delta
     cached: tuple = ()  # intra-round caches; unpersist after checkpoint
 
     def materialize(self) -> int:
@@ -100,8 +101,6 @@ class RoundOutputs:
         CONCURRENT jobs (round 5): new_links' chain shares the batch
         cache, so overlapping them hides the second job's scheduling
         and broadcast latency instead of paying it serially."""
-        if self.new_links is None:
-            return self.batch.count()
         # Round 6 (ADVICE r05): the duplicate-compute window of the
         # concurrent form is ACCEPTED and documented — the A/B the
         # advice asked for was run both ways on bench_frontier
@@ -545,9 +544,12 @@ def run_round(
     actions = workshop_actions(extracted, state.workshops, round_no).cache()
 
     # Link discovery → canonicalize → in-round dedup → anti-join the
-    # url_seen set AND the live frontier (D1: left-anti joins on
-    # (url_hash, url) — hash first for cheap compares, string second
-    # so a 64-bit collision can never corrupt the seen-set).
+    # frontier's keys (D1: a left-anti join on (url_hash, url) — hash
+    # first for cheap compares, string second so a 64-bit collision can
+    # never corrupt the seen-set).  The frontier IS the URL-seen set:
+    # every url_seen row comes from a batch row, no path drops a
+    # frontier row, and eviction resets rows instead of removing them,
+    # so url_seen ⊆ frontier and joining url_seen too changes nothing.
     parent = batch.select(
         F.col("url").alias("src_url"), "priority", "depth"
     )
@@ -580,37 +582,22 @@ def run_round(
             (F.min("depth") + 1).cast("int").alias("depth"),
         )
     )
+    frontier_keys = state.frontier.select("url_hash", "url")
     extra_caches: list = []
-    if (
-        seen_filter_dir is not None
-        and cuckoo.load_params(seen_filter_dir, store_factory) is not None
-    ):
+    if seen_filter_dir is not None:
         # Filter-accelerated D1: links the cuckoo sidecar
-        # (operators/cuckoo.py) calls definitely unseen skip the exact
-        # anti-join against url_seen; positives are verified exactly, so
-        # the result equals the plain anti-join (no false negatives).
-        unseen = cuckoo.anti_join_with_cuckoo(
-            links, state.url_seen, seen_filter_dir, caches=extra_caches,
+        # (operators/cuckoo.py), keyed by the same frontier keys, calls
+        # definitely unseen skip the exact anti-join; positives are
+        # verified exactly.  The caller keeps the sidecar current with
+        # this round's input frontier (crawl() rebuilds a stale one), so
+        # the result equals the plain anti-join.
+        new_links = cuckoo.anti_join_with_cuckoo(
+            links, frontier_keys, seen_filter_dir, caches=extra_caches,
             store_factory=store_factory,
-        )
-        new_links = unseen.join(
-            state.frontier.select("url_hash", "url"),
-            ["url_hash", "url"],
-            "left_anti",
         ).cache()
     else:
-        # fused anti-join (r06): "not in url_seen AND not in frontier"
-        # ⇔ one left_anti against the UNION of both key sets — links
-        # shuffle once instead of twice (the old chained form shuffled
-        # the first anti's output again for the second).  Duplicates in
-        # the union are irrelevant to an anti-join; both selects share
-        # one column order (positional union).
         new_links = links.join(
-            state.url_seen.select("url_hash", "url").union(
-                state.frontier.select("url_hash", "url")
-            ),
-            ["url_hash", "url"],
-            "left_anti",
+            frontier_keys, ["url_hash", "url"], "left_anti"
         ).cache()
 
     # State updates.  Revisited URLs (last_fetch_round ≥ 0) are already
@@ -670,21 +657,27 @@ def run_round(
     # Per-partition lineage/metrics (north_rule; reference analog:
     # scraper_runs, /root/reference/dashboard/lib/db/schema.sql:23-31).
     # fetched / deduped (novel links surviving the seen anti-join) /
-    # emitted (action rows) are counted per task partition of their own
-    # stage.  One tagged union + one groupBy — a single shuffle over
-    # three cached inputs; per-metric joins would add several scheduled
-    # jobs per round, and at toy scale per-job latency dominates the
-    # round (measured ~-35% frontier throughput with the join form).
-    def _tag(df: DataFrame, kind: str) -> DataFrame:
+    # emitted (action rows) are counted per URL partition:
+    # partition_id = pmod(url_hash, spark.sql.shuffle.partitions), so the
+    # rows depend on the data, not on how Spark split a stage — a
+    # resumed round writes the same rows.  Action rows carry only the
+    # canonical url, whose xxhash64 is its url_hash.  One tagged union +
+    # one groupBy — a single shuffle over three cached inputs;
+    # per-metric joins would add several scheduled jobs per round, and
+    # at toy scale per-job latency dominates the round (measured ~-35%
+    # frontier throughput with the join form).
+    n_metric_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    def _tag(df: DataFrame, kind: str, url_hash) -> DataFrame:
         return df.select(
-            F.spark_partition_id().alias("partition_id"),
+            F.pmod(url_hash, F.lit(n_metric_parts)).cast("int").alias("partition_id"),
             F.lit(kind).alias("__kind"),
         )
 
     metrics = (
-        _tag(found, "fetched")
-        .union(_tag(new_links, "deduped"))
-        .union(_tag(actions, "emitted"))
+        _tag(found, "fetched", F.col("url_hash"))
+        .union(_tag(new_links, "deduped", F.col("url_hash")))
+        .union(_tag(actions, "emitted", F.xxhash64("url")))
         .groupBy("partition_id")
         .agg(
             F.count(F.when(F.col("__kind") == "fetched", 1)).alias("fetched"),

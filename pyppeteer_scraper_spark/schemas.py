@@ -1,4 +1,4 @@
-"""Explicit StructType schemas for every engine table.
+"""Explicit StructType schemas for the engine tables.
 
 The reference's schemas are implicit (dicts shaped by ``.get()`` reads,
 documented only by its JSON fixtures, e.g.
@@ -9,6 +9,10 @@ this to explicit columnar schemas so Catalyst can prune/push down.
 from __future__ import annotations
 
 from pyspark.sql import types as T
+
+# Epoch second of round 0 (2026-01-01T00:00:00Z): round timestamps and
+# synthetic page timestamps count from here, never from the wall clock.
+BASE_EPOCH = 1767225600
 
 # ---------------------------------------------------------------------------
 # Input table: Common-Crawl-style fetched pages (BASELINE.json input_hint).
@@ -22,38 +26,11 @@ PAGES_SCHEMA = T.StructType(
     ]
 )
 
-# Crawl frontier — the partitioned priority queue (FIXTURES.md §5).
-FRONTIER_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("url_hash", T.LongType(), False),
-        T.StructField("host", T.StringType(), True),
-        T.StructField("domain", T.StringType(), True),
-        T.StructField("priority", T.IntegerType(), True),
-        T.StructField("depth", T.IntegerType(), True),
-        T.StructField("discovered_ts", T.TimestampType(), True),
-        T.StructField("state", T.StringType(), True),  # pending|fetched|blocked|missing
-        # Revisit cadence — the cron-tier analog (0 = crawl once;
-        # 1 = every round / "hourly"; 2 = every 2 rounds / "daily").
-        T.StructField("revisit_interval", T.IntegerType(), True),
-        T.StructField("last_fetch_round", T.IntegerType(), True),  # -1 = never
-    ]
-)
-
 URL_SEEN_SCHEMA = T.StructType(
     [
         T.StructField("url_hash", T.LongType(), False),
         T.StructField("url", T.StringType(), False),
         T.StructField("first_seen_round", T.IntegerType(), True),
-    ]
-)
-
-ROBOTS_SCHEMA = T.StructType(
-    [
-        T.StructField("domain", T.StringType(), False),
-        T.StructField("allow", T.BooleanType(), True),
-        T.StructField("crawl_delay_ms", T.LongType(), True),
-        T.StructField("max_per_round", T.IntegerType(), True),
     ]
 )
 
@@ -84,26 +61,6 @@ EXTRACTED_SCHEMA = T.StructType(
         T.StructField("lang", T.StringType(), True),
         T.StructField("links", T.ArrayType(T.StringType()), True),
         T.StructField("payload_json", T.StringType(), True),
-    ]
-)
-
-LINKS_SCHEMA = T.StructType(
-    [
-        T.StructField("src_url", T.StringType(), False),
-        T.StructField("dst_url", T.StringType(), False),
-    ]
-)
-
-# CDC snapshot table — reference `ircc_state`
-# (/root/reference/dashboard/lib/db/schema.sql:14-21).
-SNAPSHOT_SCHEMA = T.StructType(
-    [
-        T.StructField("key", T.StringType(), False),
-        T.StructField("estimated_time", T.StringType(), True),
-        T.StructField("people_ahead", T.StringType(), True),
-        T.StructField("total_waiting", T.StringType(), True),
-        T.StructField("last_updated", T.StringType(), True),
-        T.StructField("scraped_at", T.TimestampType(), True),
     ]
 )
 

@@ -26,9 +26,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyppeteer_scraper_spark.schemas import BASE_EPOCH
+
 MEGA_HOST = "mega-host.example"
 N_SITES = 197
-BASE_EPOCH = 1767225600  # 2026-01-01T00:00:00Z
 PAYLOAD_MOD = 20  # doc_id % 20 == 7 → embedded workshop payload (~5%)
 
 

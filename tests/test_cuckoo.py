@@ -1,7 +1,9 @@
-"""Cuckoo-filter seen-sidecar: no-false-negative invariant, deletion
-(recrawl eviction), overflow-stash behavior, the pluggable shard store,
-and crawl-loop parity with the plain anti-join, also when the sidecar is
-first enabled on a resumed crawl."""
+"""Cuckoo-filter seen-sidecar: no-false-negative invariant, duplicate
+inserts, overflow-stash behavior, the pluggable shard store, and
+crawl-loop parity with the plain anti-join: the sidecar holds every
+frontier key after a filtered crawl, and a sidecar the crawl did not
+keep current (rounds run without it, or one holding only url_seen keys
+and no round marker) is rebuilt on resume."""
 
 import numpy as np
 import pytest
@@ -10,15 +12,16 @@ from pyspark.sql import functions as F
 from pyppeteer_scraper_spark.operators.cuckoo import (
     CuckooParams,
     _contains,
-    _delete_batch,
     _insert_batch,
     anti_join_with_cuckoo,
     cuckoo_annotate,
-    delete_cuckoo_shards,
     load_params,
+    load_round,
     params_for,
     update_cuckoo_shards,
 )
+from pyppeteer_scraper_spark.plans.checkpoint import crawl, load_state
+from pyppeteer_scraper_spark.sources.datagen import generate_crawl_tables
 
 
 def _seen_df(spark, ids):
@@ -58,49 +61,9 @@ def test_cuckoo_no_false_negatives_and_exactness(spark, tmp_path):
     assert len(accel) == 2000
 
 
-def test_cuckoo_delete_enables_recrawl(spark, tmp_path):
-    """The capability bloom lacks: evict a URL cohort in O(batch) so it
-    re-enters the crawlable set, without touching the other 90%."""
-    d = str(tmp_path / "ckdel")
-    update_cuckoo_shards(_seen_df(spark, range(0, 2000)), d)
-    cohort = _seen_df(spark, range(500, 700))
-    assert delete_cuckoo_shards(cohort, d) == 200
-
-    ann = cuckoo_annotate(
-        _seen_df(spark, range(0, 2000)).drop("first_seen_round"), d
-    ).toPandas()
-    n = ann["url"].str.removeprefix("https://x/").astype(int)
-    evicted = (n >= 500) & (n < 700)
-    # kept keys: hard no-false-negative guarantee
-    assert ann.loc[~evicted, "maybe_seen"].all()
-    # evicted keys: gone up to fingerprint-collision FPs
-    assert ann.loc[evicted, "maybe_seen"].mean() < 0.05
-
-    # recrawl flow end-to-end: drop the cohort from url_seen AND the
-    # filter → the accelerated anti-join readmits exactly the cohort.
-    seen_after = _seen_df(spark, range(0, 2000)).filter(
-        ~((F.col("url_hash").isNotNull())
-          & (F.substring("url", 11, 10).cast("int") >= 500)
-          & (F.substring("url", 11, 10).cast("int") < 700))
-    )
-    candidates = _seen_df(spark, range(0, 2000)).drop("first_seen_round")
-    plain = set(
-        r["url"]
-        for r in candidates.join(
-            seen_after.select("url_hash", "url"), ["url_hash", "url"], "left_anti"
-        ).collect()
-    )
-    accel = set(
-        r["url"]
-        for r in anti_join_with_cuckoo(candidates, seen_after, d).collect()
-    )
-    assert accel == plain
-    assert len(accel) == 200
-
-
 def test_cuckoo_duplicate_copy_accounting():
-    """Insert twice / delete once ⇒ still present; delete twice ⇒ gone
-    (pure numpy, single shard)."""
+    """Inserting keys a second time stores a second copy of each and
+    loses no key (pure numpy, single shard)."""
     rng = np.random.default_rng(11)
     p = CuckooParams(n_shards=1, n_buckets=1 << 10)
     table = np.zeros((p.n_buckets, 4), dtype=np.uint16)
@@ -109,13 +72,8 @@ def test_cuckoo_duplicate_copy_accounting():
     stash = _insert_batch(table, stash, keys, p)
     dup = keys[:200]
     stash = _insert_batch(table, stash, dup, p)
-    stash, n1 = _delete_batch(table, stash, dup, p)
-    assert n1 == 200
-    assert _contains(table, stash, keys, p).all(), "FN after deleting one copy"
-    stash, n2 = _delete_batch(table, stash, dup, p)
-    assert n2 == 200
-    assert _contains(table, stash, dup, p).mean() < 0.05
-    assert _contains(table, stash, keys[200:], p).all()
+    assert (table != 0).sum() + len(stash) == 1700
+    assert _contains(table, stash, keys, p).all(), "FN after a duplicate insert"
 
 
 def test_cuckoo_overflow_stash_keeps_no_fn_guarantee():
@@ -150,48 +108,95 @@ def test_cuckoo_params_sizing_and_mismatch(spark, tmp_path):
         )
 
 
-def test_crawl_with_cuckoo_matches_plain(spark, sf_small, tmp_path):
-    from pyppeteer_scraper_spark.plans.checkpoint import crawl
-    from pyppeteer_scraper_spark.sources.datagen import generate_crawl_tables
-
-    t = generate_crawl_tables(spark, sf_small)
-    plain = crawl(
-        spark, t["pages"], t["seeds"], t["robots"], 3, str(tmp_path / "plain")
+def _snapshot(state):
+    """Sorted rows, so a duplicate frontier row shows as a difference."""
+    frontier = sorted(
+        (r["url"], r["priority"], r["depth"], r["state"], r["last_fetch_round"])
+        for r in state.frontier.collect()
     )
+    seen = sorted((r["url"], r["first_seen_round"]) for r in state.url_seen.collect())
+    ws = sorted(
+        (r["event_code"], r["is_registered"], r["discovered_round"])
+        for r in state.workshops.collect()
+    )
+    return frontier, seen, ws
+
+
+@pytest.fixture(scope="module")
+def crawl_tables(spark, sf_small):
+    return generate_crawl_tables(spark, sf_small)
+
+
+@pytest.fixture(scope="module")
+def plain_3_rounds(spark, crawl_tables, tmp_path_factory):
+    """State snapshot of a 3-round crawl without the seen filter."""
+    t = crawl_tables
+    ckpt = str(tmp_path_factory.mktemp("plain"))
+    res = crawl(spark, t["pages"], t["seeds"], t["robots"], 3, ckpt)
+    return _snapshot(res.state)
+
+
+def _frontier_keys_all_maybe_seen(frontier, cuckoo_dir):
+    ann = cuckoo_annotate(frontier.select("url_hash", "url"), cuckoo_dir)
+    return ann.filter(~F.col("maybe_seen")).count() == 0
+
+
+def test_crawl_with_cuckoo_matches_plain(
+    spark, crawl_tables, plain_3_rounds, tmp_path
+):
+    """A filtered crawl equals the plain one, and its sidecar holds every
+    frontier key — pending and blocked URLs that were never fetched
+    included — so its negatives may skip the exact anti-join."""
+    t = crawl_tables
+    ckpt = str(tmp_path / "ck")
     cuckooed = crawl(
-        spark, t["pages"], t["seeds"], t["robots"], 3, str(tmp_path / "ck"),
-        use_seen_filter=True,
+        spark, t["pages"], t["seeds"], t["robots"], 3, ckpt, use_seen_filter=True,
     )
-    a = sorted(
-        (r["url"], r["first_seen_round"]) for r in plain.state.url_seen.collect()
-    )
-    b = sorted(
-        (r["url"], r["first_seen_round"])
-        for r in cuckooed.state.url_seen.collect()
-    )
-    assert a == b
-    fa = sorted((r["url"], r["state"]) for r in plain.state.frontier.collect())
-    fb = sorted((r["url"], r["state"]) for r in cuckooed.state.frontier.collect())
-    assert fa == fb
+    assert _snapshot(cuckooed.state) == plain_3_rounds
+    frontier = cuckooed.state.frontier
+    states = {r["state"] for r in frontier.select("state").distinct().collect()}
+    assert {"pending", "blocked"} <= states
+    assert _frontier_keys_all_maybe_seen(frontier, f"{ckpt}/cuckoo")
+    assert load_round(f"{ckpt}/cuckoo") == 3
 
 
-def test_enable_cuckoo_on_resume_is_exact(spark, sf_small, tmp_path):
-    """Turning the sidecar on for a RESUMED crawl must backfill crawl
-    history — delta-only inserts would let previously-seen URLs through
-    the 'definitely unseen' fast path and re-enter the frontier."""
-    from pyppeteer_scraper_spark.plans.checkpoint import crawl
-    from pyppeteer_scraper_spark.sources.datagen import generate_crawl_tables
+def test_enable_cuckoo_on_resume_is_exact(
+    spark, crawl_tables, plain_3_rounds, tmp_path
+):
+    """Filtered → unfiltered → filtered legs equal a plain crawl.  The
+    middle leg leaves the sidecar without its keys, and its marker at
+    round 1; the last leg must rebuild it from the full frontier, or the
+    missed keys would pass the 'definitely unseen' fast path and
+    re-enter the frontier."""
+    t = crawl_tables
+    ckpt = str(tmp_path / "m")
+    for resume, use_seen_filter in ((False, True), (True, False), (True, True)):
+        mixed = crawl(
+            spark, t["pages"], t["seeds"], t["robots"], 1, ckpt,
+            resume=resume, use_seen_filter=use_seen_filter,
+        )
+    assert _snapshot(mixed.state) == plain_3_rounds
+    assert _frontier_keys_all_maybe_seen(mixed.state.frontier, f"{ckpt}/cuckoo")
 
-    t = generate_crawl_tables(spark, sf_small)
-    plain = crawl(spark, t["pages"], t["seeds"], t["robots"], 4, str(tmp_path / "p"))
-    crawl(spark, t["pages"], t["seeds"], t["robots"], 2, str(tmp_path / "m"))
-    mixed = crawl(
-        spark, t["pages"], t["seeds"], t["robots"], 2, str(tmp_path / "m"),
+
+def test_url_seen_sidecar_without_marker_is_rebuilt(
+    spark, crawl_tables, plain_3_rounds, tmp_path
+):
+    """A sidecar in the earlier layout (url_seen keys only, params but
+    no round marker) is rebuilt from the frontier on resume."""
+    t = crawl_tables
+    ckpt = str(tmp_path / "old")
+    crawl(spark, t["pages"], t["seeds"], t["robots"], 2, ckpt)
+    cuckoo_dir = f"{ckpt}/cuckoo"
+    update_cuckoo_shards(load_state(spark, ckpt).url_seen, cuckoo_dir)
+    assert load_round(cuckoo_dir) is None
+    resumed = crawl(
+        spark, t["pages"], t["seeds"], t["robots"], 1, ckpt,
         resume=True, use_seen_filter=True,
     )
-    a = sorted((r["url"], r["first_seen_round"]) for r in plain.state.url_seen.collect())
-    b = sorted((r["url"], r["first_seen_round"]) for r in mixed.state.url_seen.collect())
-    assert a == b
+    assert _snapshot(resumed.state) == plain_3_rounds
+    assert load_round(cuckoo_dir) == 3
+    assert _frontier_keys_all_maybe_seen(resumed.state.frontier, cuckoo_dir)
 
 
 def test_shard_store_seam(spark, tmp_path):

@@ -1,9 +1,11 @@
 """End-to-end TTL eviction → recrawl (VERDICT r03 #9): evict a fetched
-cohort from url_seen + the cuckoo sidecar via plans/evict.py, resume
-the crawl, and require (a) byte-identical state vs the exact-join leg
-(the sidecar is an accelerator, never a semantics change), (b) the
-cohort actually gets re-fetched, (c) the sidecar update was O(batch)
-deletion, not a rebuild."""
+cohort from url_seen via plans/evict.py, resume the crawl, and require
+(a) byte-identical state vs the exact-join leg (the sidecar is an
+accelerator, never a semantics change), (b) the cohort actually gets
+re-fetched, (c) url_seen stays inside the frontier throughout, and (d)
+the frontier-keyed cuckoo sidecar keeps answering "maybe seen" for
+every frontier key, evicted ones included (evicted URLs stay frontier
+rows, so deleting their keys would be a false negative)."""
 
 from pyspark.sql import functions as F
 
@@ -24,6 +26,20 @@ def _snapshot(state):
     return frontier, seen
 
 
+def _assert_seen_in_frontier(state):
+    """url_seen ⊆ frontier on (url_hash, url): the frontier is the
+    URL-seen set the link dedup joins against."""
+    outside = state.url_seen.join(
+        state.frontier.select("url_hash", "url"), ["url_hash", "url"], "left_anti"
+    )
+    assert outside.count() == 0
+
+
+def _frontier_keys_all_maybe_seen(frontier, cuckoo_dir):
+    ann = cuckoo_annotate(frontier.select("url_hash", "url"), cuckoo_dir)
+    return ann.filter(~F.col("maybe_seen")).count() == 0
+
+
 def _fetched_cohort(state, n=20):
     """Deterministic evict set: the first n fetched URLs by name."""
     return (
@@ -40,11 +56,19 @@ def _run_leg(spark, tables, ckpt, use_cuckoo):
     kw = dict(use_seen_filter=True) if use_cuckoo else {}
     crawl(spark, pages, seeds, robots, 2, ckpt, **kw)
     state = load_state(spark, ckpt)
+    _assert_seen_in_frontier(state)
     cohort = _fetched_cohort(state)
     info = evict_urls(spark, ckpt, cohort)
+    evicted = load_state(spark, ckpt)
+    _assert_seen_in_frontier(evicted)
+    if use_cuckoo:
+        # evict leaves the sidecar alone: every frontier key, the
+        # evicted cohort included, still answers "maybe seen"
+        assert _frontier_keys_all_maybe_seen(evicted.frontier, f"{ckpt}/cuckoo")
     resumed = crawl(
         spark, pages, seeds, robots, 2, ckpt, resume=True, **kw
     )
+    _assert_seen_in_frontier(resumed.state)
     return state, cohort, info, resumed
 
 
@@ -64,9 +88,11 @@ def test_evict_then_recrawl_cuckoo_matches_exact(spark, sf_small, tmp_path):
         r["url"] for r in cohort_e.collect()
     )
     assert _snapshot(res_c.state) == _snapshot(res_e.state)
-    assert info_c["sidecar"] == "cuckoo-deleted"  # O(batch), no rebuild
-    assert info_e["sidecar"] == "none"
     assert info_c["evicted"] == info_e["evicted"] == 20
+    # the resumed filtered leg rebuilt the sidecar from the frontier
+    assert _frontier_keys_all_maybe_seen(
+        res_c.state.frontier, str(tmp_path / "cuckoo" / "cuckoo")
+    )
 
 
 def test_evict_state_and_sidecar_transitions(spark, sf_small, tmp_path):
@@ -83,6 +109,7 @@ def test_evict_state_and_sidecar_transitions(spark, sf_small, tmp_path):
     # rows reset to a crawlable pending state
     post = load_state(spark, ck)
     assert post.round_no == r_evict == pre.round_no + 1
+    _assert_seen_in_frontier(post)
     seen_urls = set(r["url"] for r in post.url_seen.collect())
     assert not (cohort_urls & seen_urls)
     reset = post.frontier.filter(F.col("url").isin(list(cohort_urls)))
@@ -95,14 +122,13 @@ def test_evict_state_and_sidecar_transitions(spark, sf_small, tmp_path):
         for r in rows
     )
 
-    # sidecar: evicted fingerprints removed (up to fingerprint-collision
-    # FPs), survivors keep the hard no-false-negative guarantee
+    # sidecar: untouched by the evict, so every frontier key (the
+    # evicted cohort included) keeps answering "maybe seen"
     ann = cuckoo_annotate(
-        pre.url_seen.select("url_hash", "url"), f"{ck}/cuckoo"
+        post.frontier.select("url_hash", "url"), f"{ck}/cuckoo"
     ).toPandas()
-    evicted_mask = ann["url"].isin(cohort_urls)
-    assert ann.loc[~evicted_mask, "maybe_seen"].all()
-    assert ann.loc[evicted_mask, "maybe_seen"].mean() < 0.2
+    assert ann["url"].isin(cohort_urls).sum() == len(cohort_urls)
+    assert ann["maybe_seen"].all()
 
     # recrawl: resumed rounds re-fetch evicted URLs — they re-enter
     # url_seen with a first_seen_round AFTER the eviction snapshot
@@ -115,6 +141,7 @@ def test_evict_state_and_sidecar_transitions(spark, sf_small, tmp_path):
         .count()
     )
     assert refetched > 0, "no evicted URL was re-crawled in 2 rounds"
+    _assert_seen_in_frontier(res.state)
     # and the re-fetched ones are back in the sidecar
     back = res.state.url_seen.filter(
         F.col("url").isin(list(cohort_urls))

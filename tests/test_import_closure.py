@@ -1,7 +1,8 @@
 """The crawl core's import closure: importing the crawl loop and the
 modules around it (evict, expire) loads exactly this set of engine
-modules.  The query registry (plans/queries.py) and the bloom sidecar
-(operators/bloom.py) are not part of it; the cuckoo seen filter is."""
+modules.  The query registry (plans/queries.py), the bloom sidecar
+(operators/bloom.py) and the synthetic-table generators (sources/) are
+not part of it; the cuckoo seen filter is."""
 
 import os
 import subprocess
@@ -23,9 +24,6 @@ CRAWL_CLOSURE = [
     "pyppeteer_scraper_spark.plans.extract",
     "pyppeteer_scraper_spark.plans.round",
     "pyppeteer_scraper_spark.schemas",
-    "pyppeteer_scraper_spark.sources",
-    "pyppeteer_scraper_spark.sources.datagen",
-    "pyppeteer_scraper_spark.sources.tables",
 ]
 
 
@@ -45,3 +43,4 @@ def test_crawl_import_closure_is_pinned():
     assert out == CRAWL_CLOSURE
     assert "pyppeteer_scraper_spark.operators.bloom" not in out
     assert "pyppeteer_scraper_spark.plans.queries" not in out
+    assert "pyppeteer_scraper_spark.sources.datagen" not in out
